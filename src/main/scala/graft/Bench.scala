@@ -19,6 +19,14 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
+  /** Positive integer from environment variable `name`, `default` when
+    * unset; any other value fails naming the variable and the value. */
+  def positiveIntEnv(env: Map[String, String], name: String, default: Int): Int =
+    env.get(name).fold(default) { raw =>
+      raw.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"$name must be a positive integer, got '$raw'"))
+    }
+
   /** CONTENTION SENTINEL (VERDICT r11 #1): a fixed, deterministic,
     * single-thread integer loop timed at artifact start and end. The
     * loop's work never changes, so its wall-clock is a pure probe of
@@ -422,7 +430,7 @@ object Bench {
       // StreamingPipeline.Config (measured on the interleaved wrapper
       // probe: 925 -> 217 jobs, ~60 -> ~35 s warm; see
       // OPTIMIZATION_r15.md).
-      val stateParts = sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "8").toInt
+      val stateParts = positiveIntEnv(sys.env, "SPARK_GRAFT_STREAM_SHUFFLE", 8)
       val s2 = SparkHygiene.streamStateSession(spark, stateParts)
       val t0 = System.nanoTime()
       streaming.StreamingPipeline.start(

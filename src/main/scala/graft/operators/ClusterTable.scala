@@ -145,6 +145,13 @@ object ClusterTable {
     * metadata, summarize fired clusters from their article rows, and
     * write the summary columns back (SET-style update of the metadata
     * row, `summarization_pipeline.tf:24-58`).
+    *
+    * Runs EAGERLY: the call itself executes one `collect` of the fired
+    * clusters' update rows, which reads `table` (the trigger, the
+    * fired clusters' articles). Only the returned frame is lazy. With
+    * no cluster fired it returns `table` itself. Callers that read
+    * `table` again, e.g. to write the result, should materialize it
+    * first or it is computed twice.
     */
   def summarizePass(table: DataFrame, updatedPKs: DataFrame, threshold: Int = 5): DataFrame = {
     val spark = table.sparkSession

@@ -57,9 +57,6 @@ object Clustering {
   case class Config(
       eps: Double = DefaultEps,
       strategy: JoinStrategy = ExactJoin,
-      /** legacy flag — overrides `strategy` with LshJoin(lshTables) */
-      useLsh: Boolean = false,
-      lshTables: Int = 4,
       /** Opt-in state-growth bound (VERDICT r5 missing #3). The
         * reference pool keeps every never-merged singleton forever
         * (`process_records.py:321-336` grows `embeds` unboundedly) — so
@@ -71,10 +68,7 @@ object Clustering {
         * broadcast scalar: no sort, no extra shuffle, per-batch cost
         * unchanged.
         */
-      singletonTtl: Option[Long] = None) {
-    def effectiveStrategy: JoinStrategy =
-      if (useLsh) LshJoin(lshTables) else strategy
-  }
+      singletonTtl: Option[Long] = None)
 
   /** Deterministic stand-in for the reference's `uuid4()` cluster ids. */
   def clusterIdFor(articleId: String): String =
@@ -148,7 +142,7 @@ object Clustering {
     // pool side streams through with no shuffle.
     val poolVecs = pool2.select(col("seq"), col("centroid"))
     val newVecs = newEntries.select(col("seq"), col("centroid"))
-    val edges = cfg.effectiveStrategy match {
+    val edges = cfg.strategy match {
       case LshJoin(tables) =>
         // asymmetric: candidates only for the new batch, never pool²
         SimilarityJoin.lsh(newVecs, poolVecs, "seq", "centroid", cfg.eps, tables)

@@ -102,7 +102,7 @@ class ClusteringSpec extends SparkSpec {
     val batch = vecBatch(members: _*)
     val exactPool = poolRows(Clustering.step(emptyPool, batch).pool)
     val lshPool = poolRows(Clustering.step(emptyPool, batch,
-      Clustering.Config(useLsh = true, lshTables = 8)).pool)
+      Clustering.Config(strategy = Clustering.LshJoin(8))).pool)
     val bandPool = poolRows(Clustering.step(emptyPool, batch,
       Clustering.Config(strategy = Clustering.BandJoin)).pool)
     assert(lshPool == exactPool)
