@@ -27,6 +27,27 @@ object Bench {
         s"$name must be a positive integer, got '$raw'"))
     }
 
+  /** The bench's numeric settings, all parsed before any work starts so a
+    * bad value fails at once, naming the variable and the value, rather
+    * than after the catalog sweep that precedes its first use. */
+  final case class Settings(cpus: Int, streamRuns: Int, pipelineRuns: Int, deadlineSec: Double)
+
+  object Settings {
+    def fromEnv(env: Map[String, String]): Settings = Settings(
+      cpus = positiveIntEnv(env, "SPARK_GRAFT_CPUS", 32),
+      streamRuns = positiveIntEnv(env, "SPARK_GRAFT_STREAM_RUNS", 3),
+      pipelineRuns = positiveIntEnv(env, "SPARK_GRAFT_PIPELINE_RUNS", 3),
+      deadlineSec = positiveDoubleEnv(env, "SPARK_GRAFT_BENCH_DEADLINE_SEC", 2400))
+  }
+
+  /** Positive finite number from environment variable `name`, `default`
+    * when unset; any other value fails naming the variable and the value. */
+  def positiveDoubleEnv(env: Map[String, String], name: String, default: Double): Double =
+    env.get(name).fold(default) { raw =>
+      raw.trim.toDoubleOption.filter(d => d > 0 && !d.isInfinite).getOrElse(
+        throw new IllegalArgumentException(s"$name must be a positive number, got '$raw'"))
+    }
+
   /** CONTENTION SENTINEL (VERDICT r11 #1): a fixed, deterministic,
     * single-thread integer loop timed at artifact start and end. The
     * loop's work never changes, so its wall-clock is a pure probe of
@@ -112,7 +133,8 @@ object Bench {
     val benchT0 = System.nanoTime()
     def elapsedSec: Double = (System.nanoTime() - benchT0) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val settings = Settings.fromEnv(sys.env)
+    val cpus = settings.cpus
     // DEADLINE BUDGET (VERDICT r13 #1): BENCH_r13.json was rc=124 with
     // ZERO output — the driver's timeout killed the JVM before the
     // headline-last design printed anything. The budget makes the bench
@@ -121,17 +143,16 @@ object Bench {
     // fits, and prints the final line early. Default sized well under
     // any plausible driver budget; the partial checkpoint lines below
     // are the second, unconditional layer of kill protection.
-    val deadlineSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_DEADLINE_SEC",
-      "2400").toDouble
+    val deadlineSec = settings.deadlineSec
     // the full sentinel triple at artifact start: serial CPU, all-core
     // CPU, fsync'd write — serial first so its draw is uncontended by
     // our own parallel probe
     val sentinelStart = sentinelSec()
-    val sentinelParStart = parallelSentinelSec(cpus.toInt)
+    val sentinelParStart = parallelSentinelSec(cpus)
     val writeProbeStart = writeProbeSec()
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -184,7 +205,7 @@ object Bench {
     // therefore the MEDIAN of `SPARK_GRAFT_STREAM_RUNS` (default 3)
     // runs, each against fresh state/checkpoint dirs.
     val streamOnly = sys.env.get("SPARK_GRAFT_BENCH_MODE").contains("stream-only")
-    val streamRuns = sys.env.getOrElse("SPARK_GRAFT_STREAM_RUNS", "3").toInt
+    val streamRuns = settings.streamRuns
     // budget-aware draws: always at least ONE, further draws only while
     // the elapsed wall stays inside the section's share of the deadline
     // (streaming ≤20%, streaming+decoupled ≤40% — the catalog sweep is
@@ -239,7 +260,7 @@ object Bench {
       f""""pipeline_streaming_decoupled":{"seconds":$decoupledSec%.3f,"articles_per_sec":$decoupledAps%.1f}"""
     def sentinelsJson(): String = {
       val sEnd = sentinelSec()
-      val pEnd = parallelSentinelSec(cpus.toInt)
+      val pEnd = parallelSentinelSec(cpus)
       val wEnd = writeProbeSec()
       f""""sentinel_sec":[$sentinelStart%.2f,$sEnd%.2f],""" +
         f""""sentinel_par_sec":[$sentinelParStart%.2f,$pEnd%.2f],""" +
@@ -334,7 +355,7 @@ object Bench {
     // a single draw has no protection against a transient box stall,
     // a median of three does — exactly the treatment the streaming
     // wrapper has carried since r7.
-    val pipelineRuns = sys.env.getOrElse("SPARK_GRAFT_PIPELINE_RUNS", "3").toInt
+    val pipelineRuns = settings.pipelineRuns
     val warmA9 = warmByName.getOrElse("a9_ui_clusters", -1.0)
     // extra pipeline draws are the first thing the deadline trims: the
     // sweep's warm a9 is already one valid draw, and a median of one is

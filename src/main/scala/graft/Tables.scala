@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated testdata tables (see TESTDATA.md).
   *
@@ -23,19 +24,27 @@ object Tables {
     * schema is the single-node stand-in for that metadata service
     * (guide §6: manifest metadata over per-query listing/inference).
     * Data reads are untouched — only the schema comes from the cache.
-    * Keyed by (path, length, mtime) — optimization r15, VERDICT r14
-    * minor #5 / ADVICE r14: a path-only key served a STALE schema if a
-    * file was regenerated in place mid-JVM (tests and tools do exactly
-    * that), silently null-filling changed columns. The stat call is
-    * microseconds against the 0.08-0.43 s inference it replaces.
+    * One entry per path, holding the file's (length, mtime) beside the
+    * schema: a path-only lookup would serve a STALE schema if a file
+    * were regenerated in place mid-JVM (tests and tools do exactly
+    * that), silently null-filling changed columns, so an entry whose
+    * fingerprint no longer matches is re-inferred and replaced. The stat
+    * call is microseconds against the 0.08-0.43 s inference it replaces.
     */
   private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), org.apache.spark.sql.types.StructType]()
+    new java.util.concurrent.ConcurrentHashMap[String, ((Long, Long), StructType)]()
 
-  private def schemaOf(spark: SparkSession, path: String): org.apache.spark.sql.types.StructType = {
+  private[graft] def cachedSchemas: Map[String, StructType] = {
+    import scala.jdk.CollectionConverters._
+    schemaCache.asScala.map { case (p, (_, s)) => p -> s }.toMap
+  }
+
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
     val f = new java.io.File(path)
-    schemaCache.computeIfAbsent((path, f.length(), f.lastModified()),
-      _ => spark.read.parquet(path).schema)
+    val stamp = (f.length(), f.lastModified())
+    schemaCache.compute(path, (_, cur) =>
+      if (cur != null && cur._1 == stamp) cur
+      else (stamp, spark.read.parquet(path).schema))._2
   }
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{ClusterStore, ClusterTable, Summarize}
+import graft.schemas.Schemas
 
 /** Decoupled consumer of the S14 change feed — the Spark-native analog
   * of the reference's DynamoDB Stream → trigger Lambda → summarization
@@ -107,7 +108,7 @@ object CdcConsumer {
              trigger: org.apache.spark.sql.streaming.Trigger =
                org.apache.spark.sql.streaming.Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream.schema(graft.schemas.Schemas.clusters)
+    spark.readStream.schema(Schemas.clusters)
       .parquet(s"$stateDir/cdc/*")
       .writeStream
       .option("checkpointLocation", checkpointDir)
@@ -139,7 +140,10 @@ object CdcConsumer {
 
     val input = StreamingPipeline.readVersion(spark, tableBase, target,
       ClusterTable.emptyTable(spark))
-    val pks = p.map(v => spark.read.parquet(s"$stateDir/cdc/v$v").select(col("PK")))
+    // every state version, feed and overlay here holds clusters-table
+    // rows, read with that schema rather than paying an inference job
+    val pks = p.map(v => spark.read.schema(Schemas.clusters).parquet(s"$stateDir/cdc/v$v")
+        .select(col("PK")))
       .reduce(_ unionByName _).distinct()
     // fired PKs stay DISTRIBUTED end-to-end (r9 review hardening: the
     // old eager collect was bounded by clusters-crossing-trigger per
@@ -177,7 +181,7 @@ object CdcConsumer {
           f.delete(new Path(StreamingPipeline.overlayPassPath(tableBase, target, p0)), true)
         }
         store.foreach { s =>
-          val truth = spark.read.parquet(dest.toString)
+          val truth = spark.read.schema(Schemas.clusters).parquet(dest.toString)
           s.rebuildBucketsFor(truth, fired)
         }
       }

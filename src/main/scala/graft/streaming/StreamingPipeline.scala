@@ -304,7 +304,7 @@ object StreamingPipeline {
         // rebuild is idempotent AND self-healing — it always rewrites
         // the complete bucket contents from committed state.
         cfg.servingStore.foreach { store =>
-          val truth = spark.read.parquet(versionPath(tableBase, batchId))
+          val truth = spark.read.schema(Schemas.clusters).parquet(versionPath(tableBase, batchId))
           store.rebuildBucketsFor(
             truth, truth.join(broadcast(updated), Seq("PK"), "left_semi"))
         }
@@ -336,6 +336,9 @@ object StreamingPipeline {
     * committed summarized overlay pass (`v<N>s`, `v<N>s<P>`) outranks
     * its base version, newer passes outrank older; staging dirs are
     * never read (ADVICE r2 / r6 semantics, unchanged).
+    *
+    * Either path reads with the known clusters schema, as [[readVersion]]
+    * does: building the frame schedules no Spark job.
     */
   def latestTable(spark: SparkSession, stateDir: String): DataFrame = {
     val base = new Path(s"$stateDir/table")
@@ -346,7 +349,7 @@ object StreamingPipeline {
       pointers.sortBy { case (v, r, _) => (-v, -r) }.foreach {
         case (_, _, dir) =>
           val p = new Path(dir)
-          if (committed(fs, p)) return spark.read.parquet(p.toString)
+          if (committed(fs, p)) return spark.read.schema(Schemas.clusters).parquet(p.toString)
       }
       return ClusterTable.emptyTable(spark)
     }
@@ -362,7 +365,7 @@ object StreamingPipeline {
     if (cands.isEmpty) ClusterTable.emptyTable(spark)
     else {
       val (_, _, name) = cands.maxBy { case (v, rank, _) => (v, rank) }
-      spark.read.parquet(new Path(base, name).toString)
+      spark.read.schema(Schemas.clusters).parquet(new Path(base, name).toString)
     }
   }
 

@@ -1,14 +1,13 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.util.Random
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
-import graft.streaming.StreamingPipeline
+import graft.operators.ClusterStore
+import graft.streaming.{CdcConsumer, StreamingPipeline}
 
 /** The micro-batch's execution contract: how many Spark jobs one
   * `processBatch` schedules, that it leaves no cache pinned on any exit
@@ -30,33 +29,6 @@ class StreamingBatchSpec extends SparkSpec {
     val singles = (0 until 500 - syndicated.size).map(i =>
       (s"b${seed}_a$i", text(), s"Article $i", f"2024-01-02 ${i % 24}%02d:00:00"))
     (syndicated ++ singles).toDF("id", "text", "title", "date")
-  }
-
-  /** Jobs started while `body` runs under a job group of its own. A
-    * broadcast exchange's future inherits the submitting thread's local
-    * properties, so the jobs it launches count too, while jobs from any
-    * other thread do not. */
-  private def jobsOf(body: => Unit): Int = {
-    val group = s"graft-batch-jobs-${System.nanoTime()}"
-    val n = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "processBatch job census", interruptOnCancel = false)
-    try body
-    finally {
-      sc.clearJobGroup()
-      // listener events arrive asynchronously: drain the bus (internal
-      // to Spark, hence the reflective call) before reading the count
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      sc.removeSparkListener(listener)
-    }
-    n.get()
   }
 
   private def persistedIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
@@ -103,6 +75,45 @@ class StreamingBatchSpec extends SparkSpec {
     info(s"decoupled processBatch jobs: $jobs (was $SeedDecoupledJobs)")
     assert(jobs < SeedDecoupledJobs)
     assert(summarized(state) == 0)
+  }
+
+  test("latestTable schedules no Spark job, on the pointer log and the listing fallback") {
+    val (_, state) = secondBatchJobs(StreamingPipeline.Config(threshold = 5))
+    val inferred = spark.read.parquet(s"$state/table/v1")
+    for (fallback <- Seq(false, true)) {
+      if (fallback) {
+        val pointers = new org.apache.hadoop.fs.Path(s"$state/table/_snapshots")
+        pointers.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(pointers, true)
+      }
+      var table: DataFrame = null
+      val jobs = jobsOf { table = StreamingPipeline.latestTable(spark, state) }
+      info(s"latestTable jobs (fallback = $fallback): $jobs (was 1)")
+      assert(jobs == 0)
+      // the known schema is the written one, column for column
+      assert(table.schema.map(f => (f.name, f.dataType)) ==
+        inferred.schema.map(f => (f.name, f.dataType)))
+      assert(table.count() == inferred.count())
+    }
+  }
+
+  // Jobs of the same pass before its feed and overlay reads took the
+  // known schema (one inference job per read), counted by this spec.
+  private val SeedCdcJobs = 23
+
+  test("CdcConsumer.runOnce over two pending versions: fewer jobs than before") {
+    val state = Files.createTempDirectory("graft-cdc-jobs").toString
+    val cfg = StreamingPipeline.Config(threshold = 5, inlineSummarize = false, emitCdc = true)
+    StreamingPipeline.processBatch(feedBatch(1L), 0L, state, cfg)
+    StreamingPipeline.processBatch(feedBatch(2L), 1L, state, cfg)
+    val store = new ClusterStore(spark, s"$state/store")
+    var consumed = Seq.empty[Long]
+    val jobs = leavesNothingPinned(
+      jobsOf { consumed = CdcConsumer.runOnce(spark, state, threshold = 5, store = Some(store)) })
+    info(s"CdcConsumer.runOnce jobs: $jobs (was $SeedCdcJobs)")
+    assert(consumed == Seq(0L, 1L))
+    assert(jobs < SeedCdcJobs)
+    // non-vacuous: both batches' 8 syndicated stories fired
+    assert(summarized(state) == 16)
   }
 
   test("a batch that throws part-way through leaves no cache pinned") {
