@@ -135,16 +135,8 @@ final class ClusterStore(spark: SparkSession, path: String, nBuckets: Int = 64) 
         // truncate lineage: parquet forbids overwriting a path that is
         // still referenced by the write's own input plan
         .localCheckpoint(true)
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try merged.write.partitionBy("bucket").mode("overwrite").parquet(path)
-      finally {
-        graft.SparkHygiene.freeCheckpoint(merged)
-        prev match {
-          case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-          case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
-      }
+      try overwriteBuckets(merged)
+      finally graft.SparkHygiene.freeCheckpoint(merged)
     } finally up.unpersist()
   }
 
@@ -166,14 +158,15 @@ final class ClusterStore(spark: SparkSession, path: String, nBuckets: Int = 64) 
       rows.write.partitionBy("bucket").mode("errorifexists").parquet(path)
       return
     }
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try rows.write.partitionBy("bucket").mode("overwrite").parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    overwriteBuckets(rows)
   }
+
+  /** Replace the buckets present in `rows` and leave every other bucket
+    * as it is: a dynamic partition overwrite, asked for on this write
+    * alone so the caller's session conf is never changed. */
+  private def overwriteBuckets(rows: DataFrame): Unit =
+    rows.write.partitionBy("bucket").mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic").parquet(path)
 
   /** Data files per bucket partition — test/observability hook for
     * asserting untouched partitions are left alone.

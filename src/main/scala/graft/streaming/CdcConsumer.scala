@@ -19,10 +19,10 @@ import graft.schemas.Schemas
   * un-summarized plus its upsert rows under `cdc/v<N>`. The consumer
   * folds every pending feed version into ONE summarize pass against the
   * NEWEST committed table version and publishes the result as that
-  * version's summarized OVERLAY (`table/v<N>s`) — readers
-  * ([[StreamingPipeline.latestTable]] and the producer's state read)
-  * prefer a committed overlay, and the base version is never touched,
-  * so no crash window can make state disappear.
+  * version's summarized OVERLAY (`table/v<N>s`), which every reader
+  * resolves as [[StreamingPipeline.readVersion]] describes. The base
+  * version is never touched, so no crash window can make state
+  * disappear.
   *
   * Why this converges (r6 review hardening):
   *  - the trigger predicate is LEVEL-based (articles since last summary
@@ -55,42 +55,14 @@ object CdcConsumer {
   private def fsOf(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def committed(spark: SparkSession, base: Path): Seq[Long] = {
-    val f = fsOf(spark, base)
-    if (!f.exists(base)) return Nil
-    f.listStatus(base).toSeq.flatMap { st =>
-      StreamingPipeline.parseVersionDir(st.getPath.getName) match {
-        case Some((v, "")) if f.exists(new Path(st.getPath, "_SUCCESS")) => Some(v)
-        case _ => None
-      }
-    }
-  }
-
   private def markerPath(stateDir: String, v: Long) =
     new Path(s"$stateDir/cdc_done/v$v")
 
   /** Feed versions committed by the producer and not yet consumed. */
   def pending(spark: SparkSession, stateDir: String): Seq[Long] = {
     val f = fsOf(spark, new Path(stateDir))
-    committed(spark, new Path(s"$stateDir/cdc"))
+    StreamingPipeline.committedVersions(spark, s"$stateDir/cdc")
       .filterNot(v => f.exists(markerPath(stateDir, v)))
-      .sorted
-  }
-
-  /** Delete stray overlay-staging dirs (`table/v<N>st`) left by a crash
-    * mid-pass. Always safe: staging is never read, and an interrupted
-    * pass replays in full from the committed overlay/base. Idempotent.
-    */
-  def recover(spark: SparkSession, stateDir: String): Unit = {
-    val tableBase = new Path(s"$stateDir/table")
-    val f = fsOf(spark, tableBase)
-    if (!f.exists(tableBase)) return
-    f.listStatus(tableBase).foreach { st =>
-      StreamingPipeline.parseVersionDir(st.getPath.getName) match {
-        case Some((_, "st")) => f.delete(st.getPath, true)
-        case _ => ()
-      }
-    }
   }
 
   /** The "second stream" form of the consumer (reference: the Lambda is
@@ -127,15 +99,14 @@ object CdcConsumer {
   def runOnce(spark: SparkSession, stateDir: String, threshold: Int = 5,
               store: Option[ClusterStore] = None,
               retainVersions: Int = 3, gracePasses: Int = 1): Seq[Long] = {
-    recover(spark, stateDir)
     val tableBase = s"$stateDir/table"
-    val tables = committed(spark, new Path(tableBase))
+    val tables = StreamingPipeline.committedVersions(spark, tableBase)
     val p = pending(spark, stateDir)
     if (p.isEmpty || tables.isEmpty) return Nil
     // newest committed state — feeds older than it (even ones whose own
     // table version was pruned) fold in here: their PKs still name the
     // same clusters and the trigger predicate is level-based
-    val target = tables.max
+    val target = tables.last
     val f = fsOf(spark, new Path(stateDir))
 
     val input = StreamingPipeline.readVersion(spark, tableBase, target,
@@ -169,11 +140,6 @@ object CdcConsumer {
         val dest = new Path(StreamingPipeline.overlayPassPath(tableBase, target, next))
         ClusterTable.summarizePass(input, pks, threshold)
           .write.mode("overwrite").parquet(dest.toString)
-        // snapshot publish: the overlay pass outranks the base version
-        // (rank = pass + 1, matching the legacy listing order) so
-        // latestTable's pointer resolution serves the summarized state
-        graft.sources.Snapshots.publishPointer(spark, tableBase, target,
-          next + 1L, dest.toString)
         // grace-window prune: keep the new pass and its `gracePasses`
         // predecessors so a reader that planned against a recent pass
         // still executes (see the object doc for the window's bound)

@@ -97,8 +97,8 @@ object StreamingPipeline {
   /** The [[CdcConsumer]]'s summarized OVERLAY of a table version: same
     * content as `v<N>` plus the summarize pass. Each consumer pass
     * publishes a FRESH pass dir — `v<N>s` (pass 0), `v<N>s1`, `v<N>s2`,
-    * … — committed by its `_SUCCESS`; readers resolve the newest
-    * committed pass. Nothing is renamed or overwritten under a reader
+    * … — committed by its `_SUCCESS` ([[readVersion]] says which one a
+    * reader gets). Nothing is renamed or overwritten under a reader
     * (ADVICE r6 — the old delete-then-rename swap could FileNotFound a
     * reader that had planned against the live overlay): prior passes
     * survive the consumer's `gracePasses` window (default 1 — see
@@ -112,23 +112,22 @@ object StreamingPipeline {
     if (pass == 0L) overlayPath(base, v) else s"${overlayPath(base, v)}$pass"
 
   /** Overlay pass number from a parsed dir suffix: `s` → 0, `s<P>` → P;
-    * base (``""``) and legacy staging (`st`) are not overlays. */
+    * the base (``""``) is not an overlay. */
   private[streaming] def overlayPass(suffix: String): Option[Long] =
     if (suffix == "s") Some(0L)
-    else if (suffix.length > 1 && suffix != "st" && suffix.head == 's')
+    else if (suffix.length > 1 && suffix.head == 's')
       suffix.tail.toLongOption.filter(_ > 0L)
     else None
 
-  /** (version, suffix) parsed from a state dir name — `v<N>`,
-    * `v<N>s`/`v<N>s<P>` (overlay passes) or `v<N>st` (legacy overlay
-    * staging; never read). `toLongOption`: a stray >19-digit dir name is
-    * junk to skip, not a NumberFormatException that kills listings
-    * (ADVICE r6). */
+  /** (version, suffix) parsed from a state dir name — `v<N>` or
+    * `v<N>s`/`v<N>s<P>` (overlay passes); any other name is junk and
+    * never read. `toLongOption`: a stray >19-digit dir name is junk to
+    * skip, not a NumberFormatException that kills listings (ADVICE r6). */
   private[streaming] def parseVersionDir(name: String): Option[(Long, String)] = {
     if (!name.startsWith("v")) return None
     val digits = name.drop(1).takeWhile(_.isDigit)
     val suffix = name.drop(1 + digits.length)
-    val suffixOk = suffix == "" || suffix == "st" || overlayPass(suffix).isDefined
+    val suffixOk = suffix == "" || overlayPass(suffix).isDefined
     if (digits.isEmpty || !suffixOk) None
     else digits.toLongOption.map((_, suffix))
   }
@@ -136,26 +135,34 @@ object StreamingPipeline {
   private def committed(fs: org.apache.hadoop.fs.FileSystem, dir: Path): Boolean =
     fs.exists(new Path(dir, "_SUCCESS"))
 
-  /** Committed overlay pass numbers for table version `v`, ascending. */
-  private[streaming] def overlayPasses(spark: SparkSession, base: String,
-                                       v: Long): Seq[Long] = {
+  /** (version, suffix) of every committed version dir under `base`. */
+  private def committedDirs(spark: SparkSession, base: String): Seq[(Long, String)] = {
     val p = new Path(base)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return Nil
     fs.listStatus(p).toSeq.flatMap { st =>
-      parseVersionDir(st.getPath.getName) match {
-        case Some((ver, sfx)) if ver == v && committed(fs, st.getPath) =>
-          overlayPass(sfx)
-        case _ => None
-      }
-    }.sorted
+      parseVersionDir(st.getPath.getName).filter(_ => committed(fs, st.getPath))
+    }
   }
 
-  /** State version `v` under `base` (its newest committed overlay pass,
-    * if any), or `empty` when nothing is committed. Every version is
-    * written from frames of `empty`'s schema, so the read takes that
-    * schema as given instead of inferring it, which costs a Spark job
-    * per read. */
+  /** Committed base versions (`v<N>` with a `_SUCCESS`) under `base`,
+    * ascending. */
+  private[streaming] def committedVersions(spark: SparkSession, base: String): Seq[Long] =
+    committedDirs(spark, base).collect { case (v, "") => v }.sorted
+
+  /** Committed overlay pass numbers for table version `v`, ascending. */
+  private[streaming] def overlayPasses(spark: SparkSession, base: String,
+                                       v: Long): Seq[Long] =
+    committedDirs(spark, base).collect { case (`v`, sfx) => overlayPass(sfx) }.flatten.sorted
+
+  /** State version `v` under `base`, or `empty` when nothing is
+    * committed. This is how every reader resolves a version: each
+    * version dir is committed by its `_SUCCESS`, the newest committed
+    * [[CdcConsumer]] overlay pass of `v` outranks older passes and the
+    * base `v<N>`, and uncommitted (partial) dirs are never read. Every
+    * version is written from frames of `empty`'s schema, so the read
+    * takes that schema as given instead of inferring it, which costs a
+    * Spark job per read. */
   private[streaming] def readVersion(spark: SparkSession, base: String, v: Long,
                                      empty: => DataFrame): DataFrame = {
     if (v < 0) return empty
@@ -184,8 +191,6 @@ object StreamingPipeline {
         if (v <= latest - retain) fs.delete(st.getPath, true)
       }
     }
-    // retire the pruned versions' snapshot pointers with their data
-    graft.sources.Snapshots.prunePointers(spark, base, latest - retain)
   }
 
   /** One micro-batch: preprocess → embed → cluster → upsert → trigger →
@@ -257,8 +262,6 @@ object StreamingPipeline {
         // still publish the state version so restore finds a contiguous chain
         pool.write.mode("overwrite").parquet(versionPath(poolBase, batchId))
         table.write.mode("overwrite").parquet(versionPath(tableBase, batchId))
-        graft.sources.Snapshots.publishPointer(spark, tableBase, batchId, 0L,
-          versionPath(tableBase, batchId))
       } else {
         val step = Clustering.step(
           pool, prepped.select(col("id"), col("concat_embedding")),
@@ -285,13 +288,6 @@ object StreamingPipeline {
           else merged
         observedPool.write.mode("overwrite").parquet(versionPath(poolBase, batchId))
         next.write.mode("overwrite").parquet(versionPath(tableBase, batchId))
-        // snapshot publish (VERDICT r11 #4): the batch's table version
-        // enters the pointer log — readers (latestTable) resolve the
-        // manifest instead of listing/ranking the data tree. Idempotent
-        // under batch replay (same deterministic dir), rank 0 = base;
-        // the CdcConsumer's summarized overlays publish higher ranks.
-        graft.sources.Snapshots.publishPointer(spark, tableBase, batchId, 0L,
-          versionPath(tableBase, batchId))
         if (cfg.emitCdc)
           ups.write.mode("overwrite").parquet(versionPath(s"$stateDir/cdc", batchId))
         // Serving store: REBUILD the touched buckets wholesale from the
@@ -317,56 +313,16 @@ object StreamingPipeline {
     }
   }
 
-  /** Latest committed clusters table (the read path / A9 input).
-    *
-    * Primary path: the SNAPSHOT POINTER LOG (`table/_snapshots`,
-    * [[graft.sources.Snapshots.publishPointer]]) — resolve max
-    * (version, rank) over the published pointers and read exactly that
-    * directory, never listing/ranking the data tree (VERDICT r11 #4:
-    * atomic publish + O(1) rollback on the engine's own state; the
-    * ranking is IDENTICAL to the legacy listing's (version,
-    * overlay-pass) order, so results are byte-equal). A pointer whose
-    * directory was pruned between listing and read, or whose
-    * `_SUCCESS` is missing (crash mid-write before publish can't
-    * happen — publish follows the write — but a half-deleted prune
-    * can), falls through to the next-ranked pointer.
-    *
-    * Fallback path (no pointer log — a pre-r12 state dir): list the
-    * data tree; only `_SUCCESS`-committed versions are candidates, a
-    * committed summarized overlay pass (`v<N>s`, `v<N>s<P>`) outranks
-    * its base version, newer passes outrank older; staging dirs are
-    * never read (ADVICE r2 / r6 semantics, unchanged).
-    *
-    * Either path reads with the known clusters schema, as [[readVersion]]
-    * does: building the frame schedules no Spark job.
+  /** Latest committed clusters table (the read path / A9 input): the
+    * newest committed base version, read through [[readVersion]], so a
+    * committed summarized overlay of it is what the caller sees. Building
+    * the frame schedules no Spark job.
     */
   def latestTable(spark: SparkSession, stateDir: String): DataFrame = {
-    val base = new Path(s"$stateDir/table")
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(base)) return ClusterTable.emptyTable(spark)
-    val pointers = graft.sources.Snapshots.pointerEntries(spark, s"$stateDir/table")
-    if (pointers.nonEmpty) {
-      pointers.sortBy { case (v, r, _) => (-v, -r) }.foreach {
-        case (_, _, dir) =>
-          val p = new Path(dir)
-          if (committed(fs, p)) return spark.read.schema(Schemas.clusters).parquet(p.toString)
-      }
-      return ClusterTable.emptyTable(spark)
-    }
-    val cands = fs.listStatus(base).map(_.getPath.getName).flatMap { n =>
-      parseVersionDir(n) match {
-        case Some((v, suffix)) if suffix != "st" &&
-          committed(fs, new Path(base, n)) =>
-          // rank: base = 0, overlay pass P = P + 1
-          Some((v, overlayPass(suffix).fold(0L)(_ + 1L), n))
-        case _ => None
-      }
-    }
-    if (cands.isEmpty) ClusterTable.emptyTable(spark)
-    else {
-      val (_, _, name) = cands.maxBy { case (v, rank, _) => (v, rank) }
-      spark.read.schema(Schemas.clusters).parquet(new Path(base, name).toString)
-    }
+    val tableBase = s"$stateDir/table"
+    val empty = ClusterTable.emptyTable(spark)
+    committedVersions(spark, tableBase).lastOption
+      .fold(empty)(readVersion(spark, tableBase, _, empty))
   }
 
   /** Start the stream: `articles` must be a streaming DataFrame with the

@@ -89,6 +89,36 @@ class ClusterStoreSpec extends SparkSpec {
     assert(store.read().filter(col("PK") === "c7").head().getString(2) == "updated")
   }
 
+  test("merge and rebuildBucketsFor leave the session's partitionOverwriteMode as they found it") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    // getOption answers the default for an unset key; getAll holds only
+    // the keys the session set
+    def conf = (spark.conf.getOption(key), spark.conf.getAll.get(key))
+    val before = spark.conf.getAll.get(key)
+    try {
+      for (preset <- Seq(None, Some("static"))) {
+        preset.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+        val seen = conf
+        assert(seen._2 == preset)
+        val path = Files.createTempDirectory("graft-store-conf").toString + "/t"
+        val store = new ClusterStore(spark, path, nBuckets = 16)
+        val truth = rows((0 until 20).map(i => (s"c$i", "M", "seed")): _*)
+        store.rebuildBucketsFor(truth, truth)
+        store.merge(rows(("c7", "M", "merged")))
+        assert(conf == seen, s"after merge, preset $preset")
+        val truth2 = truth.withColumn("description",
+          when(col("PK") === "c3", "rebuilt").when(col("PK") === "c7", "merged")
+            .otherwise(col("description")))
+        store.rebuildBucketsFor(truth2, truth2.filter(col("PK") === "c3"))
+        assert(conf == seen, s"after rebuildBucketsFor, preset $preset")
+        // both overwrites stayed dynamic under a static session: the
+        // buckets neither write touched kept their rows
+        val got = store.read().select("PK", "description").as[(String, String)].collect().toMap
+        assert(got == truth2.select("PK", "description").as[(String, String)].collect().toMap)
+      }
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("bucket-pruned point read returns one cluster's rows") {
     val path = Files.createTempDirectory("graft-store3").toString + "/t"
     val store = new ClusterStore(spark, path, nBuckets = 8)

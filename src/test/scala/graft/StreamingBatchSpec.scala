@@ -77,23 +77,17 @@ class StreamingBatchSpec extends SparkSpec {
     assert(summarized(state) == 0)
   }
 
-  test("latestTable schedules no Spark job, on the pointer log and the listing fallback") {
+  test("latestTable schedules no Spark job and reads the written schema") {
     val (_, state) = secondBatchJobs(StreamingPipeline.Config(threshold = 5))
     val inferred = spark.read.parquet(s"$state/table/v1")
-    for (fallback <- Seq(false, true)) {
-      if (fallback) {
-        val pointers = new org.apache.hadoop.fs.Path(s"$state/table/_snapshots")
-        pointers.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(pointers, true)
-      }
-      var table: DataFrame = null
-      val jobs = jobsOf { table = StreamingPipeline.latestTable(spark, state) }
-      info(s"latestTable jobs (fallback = $fallback): $jobs (was 1)")
-      assert(jobs == 0)
-      // the known schema is the written one, column for column
-      assert(table.schema.map(f => (f.name, f.dataType)) ==
-        inferred.schema.map(f => (f.name, f.dataType)))
-      assert(table.count() == inferred.count())
-    }
+    var table: DataFrame = null
+    val jobs = jobsOf { table = StreamingPipeline.latestTable(spark, state) }
+    info(s"latestTable jobs: $jobs (was 1 before the known schema)")
+    assert(jobs == 0)
+    // the known schema is the written one, column for column
+    assert(table.schema.map(f => (f.name, f.dataType)) ==
+      inferred.schema.map(f => (f.name, f.dataType)))
+    assert(table.count() == inferred.count())
   }
 
   // Jobs of the same pass before its feed and overlay reads took the

@@ -78,28 +78,11 @@ class StreamingSpec extends SparkSpec {
       .select("article_id").as[String].collect().toSet
     assert(alphaArts == Set("a1", "a2", "a3")) // cross-restart merge
 
-    // VERDICT r11 #4 — the kill/restart read path goes THROUGH the
-    // snapshot pointer log: the manifest exists, its max pointer names
-    // batch 1's version, version 0's pointer time-travels to the
-    // pre-restart state, and deleting the log falls back to the legacy
-    // listing with byte-identical results
-    import graft.sources.Snapshots
-    val ptrs = Snapshots.pointerEntries(spark, s"$state/table")
-    assert(ptrs.nonEmpty, "snapshot pointer log missing after the drain")
-    assert(ptrs.map(_._1).max == 1L,
-      s"two micro-batches must publish versions 0 and 1, got $ptrs")
-    val dir0 = ptrs.filter(_._1 == 0L).maxBy(_._2)._3
-    val ids0 = spark.read.parquet(dir0).filter(col("row_type") === "article")
+    // the retained version 0 time-travels to the pre-restart state
+    val ids0 = spark.read.parquet(s"$state/table/v0").filter(col("row_type") === "article")
       .select("article_id").as[String].collect().toSet
     assert(ids0 == Set("a1", "a2", "z1"),
-      "snapshot v0 must time-travel to the pre-restart state")
-    val viaPointers = t2.orderBy("PK", "SK").collect().toSeq
-    val fs = new org.apache.hadoop.fs.Path(s"$state/table/_snapshots")
-    fs.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(fs, true)
-    val viaListing = StreamingPipeline.latestTable(spark, state)
-      .orderBy("PK", "SK").collect().toSeq
-    assert(viaPointers == viaListing,
-      "pointer resolution and listing fallback must rank identically")
+      "table v0 must time-travel to the pre-restart state")
   }
 
   test("A5 pool stats surface as observed metrics on the state write") {
@@ -248,7 +231,7 @@ class StreamingSpec extends SparkSpec {
     assert(served == expect)
   }
 
-  test("CdcConsumer overlays: staging cleaned, partial overlays invisible, " +
+  test("CdcConsumer overlays: partial overlays invisible, " +
     "replay after a lost marker is monotone (no double summarization)") {
     val root = Files.createTempDirectory("graft-cdc-overlay").toString
     val state = s"$root/state"
@@ -261,11 +244,8 @@ class StreamingSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(state)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-    // a stray overlay-staging dir from a crashed pass is deleted, then
     // the pass publishes the summarized overlay WITHOUT touching v0
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$state/table/v0st"))
     assert(CdcConsumer.runOnce(spark, state, threshold = 2) == Seq(0L))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$state/table/v0st")))
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$state/table/v0/_SUCCESS")),
       "base version must never be deleted")
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$state/table/v0s/_SUCCESS")))
@@ -296,6 +276,36 @@ class StreamingSpec extends SparkSpec {
       case r if r.getAs[String]("row_type") == "metadata" &&
         r.getAs[String]("generated_summary").nonEmpty => r.getAs[Int]("summary_count")
     }.forall(_ == 1))
+  }
+
+  test("the streaming state keeps no pointer log: latestTable lists the " +
+    "committed versions and serves the newest committed overlay pass") {
+    val root = Files.createTempDirectory("graft-no-pointers").toString
+    val state = s"$root/state"
+    val cfg = StreamingPipeline.Config(threshold = 2,
+      emitCdc = true, inlineSummarize = false)
+    StreamingPipeline.processBatch(Seq(
+      ("k1", "tau tau tau tau", "K1", "2024-01-01 10:00:00"),
+      ("k2", "tau tau tau tau x", "K2", "2024-01-01 11:00:00"))
+      .toDF("id", "text", "title", "date"), 0L, state, cfg)
+    StreamingPipeline.processBatch(Seq(
+      ("k3", "tau tau tau tau y", "K3", "2024-01-02 10:00:00"),
+      ("u1", "upsilon upsilon upsilon", "U1", "2024-01-02 11:00:00"))
+      .toDF("id", "text", "title", "date"), 1L, state, cfg)
+    assert(CdcConsumer.runOnce(spark, state, threshold = 2) == Seq(0L, 1L))
+    assert(!Files.exists(Paths.get(state, "table", "_snapshots")),
+      "the engine's state must not publish a snapshot pointer log")
+    // the pass folded both feeds into table v1's first overlay pass
+    assert(Files.exists(Paths.get(state, "table", "v1s", "_SUCCESS")))
+    def sorted(df: DataFrame) = df.orderBy("PK", "SK").collect().toSeq
+    val overlay = sorted(spark.read.schema(graft.schemas.Schemas.clusters)
+      .parquet(s"$state/table/v1s"))
+    assert(sorted(StreamingPipeline.latestTable(spark, state)) == overlay)
+    // non-vacuous: the overlay differs from its base by the summary
+    assert(overlay.exists(r => r.getAs[String]("row_type") == "metadata" &&
+      r.getAs[String]("generated_summary").nonEmpty))
+    assert(sorted(spark.read.schema(graft.schemas.Schemas.clusters)
+      .parquet(s"$state/table/v1")) != overlay)
   }
 
   test("CdcConsumer passes are non-destructive for in-flight readers: a " +
