@@ -231,20 +231,43 @@ object ClusterTable {
   /** A9 — the flagship UI query (reference
     * `ClusterList-js.template:89-120`): clusters that are real clusters,
     * have a non-empty summary, and more than 2 dated articles; sorted by
-    * size desc.
+    * size desc, ties by PK.
+    *
+    * One `groupBy(PK)` pass yields both the dated-article count and the
+    * metadata row's columns (`max(when(row_type = metadata, c))`), and
+    * the eligibility filter runs on its output. The `max` is exact
+    * because the table keeps (PK, SK) unique and a metadata row's SK is
+    * `#METADATA#<PK>`, so each PK has at most one metadata row; a PK
+    * without one gets a null `is_cluster` and is not listed. Plan: one
+    * hash exchange on PK and no join, so an action runs 2 Spark jobs
+    * under AQE (the shuffle map stage, then the result) and 1 without.
+    * The string `max` makes it a sort aggregate; filtering the input to
+    * listable metadata and dated article rows first measured slower.
+    *
+    * The eligible rows are sorted after `coalesce(1)`, which also runs
+    * the final aggregate in a single task and skips the range sort's
+    * sampling job. That is cheap while the table holds thousands of
+    * clusters. When one task over every PK's partial aggregate becomes
+    * the bottleneck, drop the `coalesce(1)` and let the `orderBy`
+    * range-partition (one sampling job more).
     */
   def uiClusterList(table: DataFrame): DataFrame = {
-    val counts = table.filter(col("row_type") === "article")
-      .filter(col("publication_date").isNotNull && col("publication_date") =!= "")
-      .groupBy(col("PK")).agg(count(lit(1)).as("article_count"))
-    table.filter(col("row_type") === "metadata")
-      .join(counts, Seq("PK"))
+    val isMeta = col("row_type") === "metadata"
+    val dated = col("row_type") === "article" &&
+      col("publication_date").isNotNull && col("publication_date") =!= ""
+    def meta(c: String) = max(when(isMeta, col(c))).as(c)
+    table.groupBy(col("PK"))
+      .agg(count(when(dated, 1)).as("article_count"),
+        Seq("is_cluster", "description", "generated_summary", "number_of_articles",
+          "most_common_location", "most_common_organization", "earliest_date",
+          "latest_date").map(meta): _*)
       .filter(col("is_cluster") && col("generated_summary") =!= "" &&
         col("article_count") > 2)
       .select(col("PK"), col("description"), col("generated_summary"),
         col("number_of_articles"), col("article_count"),
         col("most_common_location"), col("most_common_organization"),
         col("earliest_date"), col("latest_date"))
+      .coalesce(1)
       .orderBy(col("number_of_articles").desc, col("PK"))
   }
 }

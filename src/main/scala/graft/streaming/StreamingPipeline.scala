@@ -135,14 +135,24 @@ object StreamingPipeline {
   private def committed(fs: org.apache.hadoop.fs.FileSystem, dir: Path): Boolean =
     fs.exists(new Path(dir, "_SUCCESS"))
 
+  /** (version, suffix, path) of every version dir under `base`, from
+    * one listing; whether each is committed is left to the caller. */
+  private def versionDirs(fs: org.apache.hadoop.fs.FileSystem,
+                          base: String): Seq[(Long, String, Path)] = {
+    val p = new Path(base)
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq.flatMap { st =>
+      parseVersionDir(st.getPath.getName).map { case (v, sfx) => (v, sfx, st.getPath) }
+    }
+  }
+
+  private def fsOf(spark: SparkSession, base: String) =
+    new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
   /** (version, suffix) of every committed version dir under `base`. */
   private def committedDirs(spark: SparkSession, base: String): Seq[(Long, String)] = {
-    val p = new Path(base)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Nil
-    fs.listStatus(p).toSeq.flatMap { st =>
-      parseVersionDir(st.getPath.getName).filter(_ => committed(fs, st.getPath))
-    }
+    val fs = fsOf(spark, base)
+    versionDirs(fs, base).collect { case (v, sfx, dir) if committed(fs, dir) => (v, sfx) }
   }
 
   /** Committed base versions (`v<N>` with a `_SUCCESS`) under `base`,
@@ -166,30 +176,32 @@ object StreamingPipeline {
   private[streaming] def readVersion(spark: SparkSession, base: String, v: Long,
                                      empty: => DataFrame): DataFrame = {
     if (v < 0) return empty
-    val reader = spark.read.schema(empty.schema)
-    val p = new Path(versionPath(base, v))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // prefer the newest committed overlay pass; older committed passes
-    // (the grace window) and then the base version are the fallbacks if
-    // a pass was pruned between listing and read
-    overlayPasses(spark, base, v).reverse.foreach { pass =>
-      val over = new Path(overlayPassPath(base, v, pass))
-      if (committed(fs, over)) {
-        try return reader.parquet(over.toString)
-        catch { case scala.util.control.NonFatal(_) => }
-      }
-    }
-    if (committed(fs, p)) reader.parquet(p.toString) else empty
+    val fs = fsOf(spark, base)
+    readListed(spark, fs, base, v, versionDirs(fs, base), empty.schema).getOrElse(empty)
+  }
+
+  /** [[readVersion]] over an existing listing `dirs` of `base`: the
+    * newest committed overlay pass of `v` that still reads, older
+    * committed passes (the grace window) if a pass was pruned since the
+    * listing, then the base version if committed. Only the dirs tried
+    * are checked for their `_SUCCESS`. */
+  private def readListed(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+                         base: String, v: Long, dirs: Seq[(Long, String, Path)],
+                         schema: org.apache.spark.sql.types.StructType): Option[DataFrame] = {
+    val reader = spark.read.schema(schema)
+    val basePath = new Path(versionPath(base, v))
+    dirs.filter(_._1 == v).flatMap { case (_, sfx, dir) => overlayPass(sfx).map((_, dir)) }
+      .sortBy(-_._1).iterator
+      .collect { case (_, over) if committed(fs, over) => over }
+      .flatMap(over => scala.util.Try(reader.parquet(over.toString)).toOption)
+      .nextOption()
+      .orElse(Option.when(committed(fs, basePath))(reader.parquet(basePath.toString)))
   }
 
   private def prune(spark: SparkSession, base: String, latest: Long, retain: Int): Unit = {
-    val p = new Path(base)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return
-    fs.listStatus(p).foreach { st =>
-      parseVersionDir(st.getPath.getName).foreach { case (v, _) =>
-        if (v <= latest - retain) fs.delete(st.getPath, true)
-      }
+    val fs = fsOf(spark, base)
+    versionDirs(fs, base).foreach { case (v, _, dir) =>
+      if (v <= latest - retain) fs.delete(dir, true)
     }
   }
 
@@ -314,15 +326,20 @@ object StreamingPipeline {
   }
 
   /** Latest committed clusters table (the read path / A9 input): the
-    * newest committed base version, read through [[readVersion]], so a
-    * committed summarized overlay of it is what the caller sees. Building
-    * the frame schedules no Spark job.
+    * newest committed base version, resolved as [[readVersion]] does,
+    * so a committed summarized overlay of it is what the caller sees.
+    * One listing of `table/` serves both choices, and only the dirs
+    * tried are checked for their `_SUCCESS`. Building the frame
+    * schedules no Spark job.
     */
   def latestTable(spark: SparkSession, stateDir: String): DataFrame = {
     val tableBase = s"$stateDir/table"
-    val empty = ClusterTable.emptyTable(spark)
-    committedVersions(spark, tableBase).lastOption
-      .fold(empty)(readVersion(spark, tableBase, _, empty))
+    val fs = fsOf(spark, tableBase)
+    val dirs = versionDirs(fs, tableBase)
+    dirs.collect { case (v, "", dir) => (v, dir) }.sortBy(-_._1).iterator
+      .collectFirst { case (v, dir) if committed(fs, dir) => v }
+      .flatMap(readListed(spark, fs, tableBase, _, dirs, Schemas.clusters))
+      .getOrElse(ClusterTable.emptyTable(spark))
   }
 
   /** Start the stream: `articles` must be a streaming DataFrame with the

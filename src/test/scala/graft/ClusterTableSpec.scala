@@ -1,10 +1,16 @@
 package graft
 
+import java.nio.file.Files
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 import org.apache.spark.sql.functions._
 
 import graft.operators.ClusterTable
+import graft.schemas.Schemas
 
-class ClusterTableSpec extends SparkSpec {
+class ClusterTableSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private val clock = "2024-06-01T00:00:00"
@@ -121,5 +127,102 @@ class ClusterTableSpec extends SparkSpec {
     val out = ClusterTable.uiClusterList(t)
       .select("PK", "article_count").as[(String, Long)].collect()
     assert(out.toSeq == Seq(("c5", 4L), ("c1", 3L)))
+  }
+
+  /** The A9 list as a metadata ⋈ dated-article-count join, sorted
+    * globally: the formulation `uiClusterList` replaced, kept as the
+    * oracle of its rows and their order. */
+  private def joinedUiClusterList(table: DataFrame): DataFrame = {
+    val counts = table.filter(col("row_type") === "article")
+      .filter(col("publication_date").isNotNull && col("publication_date") =!= "")
+      .groupBy(col("PK")).agg(count(lit(1)).as("article_count"))
+    table.filter(col("row_type") === "metadata")
+      .join(counts, Seq("PK"))
+      .filter(col("is_cluster") && col("generated_summary") =!= "" &&
+        col("article_count") > 2)
+      .select(col("PK"), col("description"), col("generated_summary"),
+        col("number_of_articles"), col("article_count"),
+        col("most_common_location"), col("most_common_organization"),
+        col("earliest_date"), col("latest_date"))
+      .orderBy(col("number_of_articles").desc, col("PK"))
+  }
+
+  /** A clusters table (full schema) of A9 edge cases. Article rows carry
+    * metadata-like values that sort above every metadata row's, so a
+    * list that read them would show. */
+  private def edgeTable(): DataFrame = {
+    val width = Schemas.clusters.size
+    def row(values: (String, Any)*): Row = {
+      val byName = values.toMap
+      Row.fromSeq(Schemas.clusters.fieldNames.toSeq.map(byName.getOrElse(_, null)))
+    }
+    def meta(pk: String, n: Integer, summary: String, isC: java.lang.Boolean) =
+      row("PK" -> pk, "SK" -> s"#METADATA#$pk", "row_type" -> "metadata",
+        "number_of_articles" -> n, "generated_summary" -> summary, "is_cluster" -> isC,
+        "description" -> s"d-$pk", "most_common_location" -> s"loc-$pk",
+        "most_common_organization" -> s"org-$pk", "earliest_date" -> "2024-01-01",
+        "latest_date" -> "2024-01-09", "summary_count" -> 1, "created_at" -> "t0")
+    def art(pk: String, id: String, date: String) =
+      row("PK" -> pk, "SK" -> s"ARTICLE#$id", "row_type" -> "article",
+        "article_id" -> id, "publication_date" -> date, "title" -> id,
+        "number_of_articles" -> 999, "generated_summary" -> "zzz", "is_cluster" -> true,
+        "description" -> "zzz", "most_common_location" -> "zzz",
+        "most_common_organization" -> "zzz", "earliest_date" -> "9999", "latest_date" -> "9999")
+    def arts(pk: String, dates: String*) =
+      dates.zipWithIndex.map { case (d, i) => art(pk, s"$pk-$i", d) }
+    val rows =
+      arts("orphan", "2024-01-01", "2024-01-02", "2024-01-03", "2024-01-04") ++ // no metadata
+        Seq(meta("lonely", 50, "s", true)) ++                                   // no articles
+        Seq(meta("undated", 40, "s", true)) ++ arts("undated", null, "", "", "2024-01-01") ++
+        Seq(meta("just3", 40, "s", true)) ++ arts("just3", null, "", "a", "b", "c") ++
+        Seq(meta("tie-b", 10, "s", true)) ++ arts("tie-b", "a", "b", "c") ++
+        Seq(meta("tie-a", 10, "s", true)) ++ arts("tie-a", "a", "b", "c") ++
+        Seq(meta("nulln", null, "s", true)) ++ arts("nulln", "a", "b", "c") ++
+        Seq(meta("nosum", 60, "", true)) ++ arts("nosum", "a", "b", "c") ++
+        Seq(meta("nullsum", 60, null, true)) ++ arts("nullsum", "a", "b", "c") ++
+        Seq(meta("single", 60, "s", false)) ++ arts("single", "a", "b", "c") ++
+        Seq(meta("nullc", 60, "s", null)) ++ arts("nullc", "a", "b", "c") ++
+        Seq(meta("big", 70, "s", true)) ++ arts("big", "a", "b", "c", "d", "e")
+    assert(rows.forall(_.length == width))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), Schemas.clusters)
+  }
+
+  test("A9 uiClusterList returns the join formulation's rows in its order " +
+    "on edge cases") {
+    val t = edgeTable()
+    val got = ClusterTable.uiClusterList(t)
+    val want = joinedUiClusterList(t)
+    assert(got.schema.map(f => (f.name, f.dataType)) ==
+      want.schema.map(f => (f.name, f.dataType)))
+    val rows = got.collect().toSeq
+    assert(rows == want.collect().toSeq)
+    assert(rows.map(_.getString(0)) == Seq("big", "just3", "tie-a", "tie-b", "nulln"))
+    assert(rows.head.getAs[String]("description") == "d-big")
+    assert(rows.head.getAs[Long]("article_count") == 5L)
+  }
+
+  test("A9 uiClusterList on a parquet table: one shuffle exchange, no " +
+    "broadcast, 2 jobs with AQE and 1 without") {
+    val dir = Files.createTempDirectory("graft-ui-list").toString
+    edgeTable().write.mode("overwrite").parquet(dir)
+    def listJobs(adaptive: Boolean,
+                 formulation: DataFrame => DataFrame = ClusterTable.uiClusterList)
+        : (Int, DataFrame) = {
+      val session = spark.newSession()
+      session.conf.set("spark.sql.adaptive.enabled", adaptive.toString)
+      val list = formulation(session.read.schema(Schemas.clusters).parquet(dir))
+      var rows = 0
+      val jobs = jobsOf { rows = list.collect().length }
+      assert(rows == 5)
+      (jobs, list)
+    }
+    val (aqeJobs, executed) = listJobs(adaptive = true)
+    val joinJobs = listJobs(adaptive = true, joinedUiClusterList)._1
+    info(s"uiClusterList jobs with AQE: $aqeJobs (the join formulation: $joinJobs)")
+    assert(aqeJobs <= 2)
+    assert(listJobs(adaptive = false)._1 == 1)
+    val plan = executed.queryExecution.executedPlan
+    assert(collect(plan) { case e: ShuffleExchangeLike => e }.size == 1, plan)
+    assert(collect(plan) { case e: BroadcastExchangeLike => e }.isEmpty, plan)
   }
 }
