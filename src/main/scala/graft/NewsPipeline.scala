@@ -59,10 +59,6 @@ object NewsPipeline {
     */
   def run(spark: SparkSession, sfDir: String): DataFrame = {
     val arts = syntheticArticles(Tables.documents(spark, sfDir))
-    var table = ClusterTable.emptyTable(spark)
-    var pool = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], Schemas.pool)
-
     // size the shuffle to the micro-batch, not the session default: a
     // batch is bounded (~500-1000 rows), so dozens of 32-way exchanges
     // per step are pure scheduling overhead. At 100 TB the same knob
@@ -75,23 +71,22 @@ object NewsPipeline {
     // in the loop now carries an explicit broadcast hint on its
     // batch-bounded side, so static planning is already optimal and
     // AQE's per-exchange stage materialization is pure scheduling
-    // overhead. The streaming wrapper keeps AQE: its state comes from
-    // parquet (real size stats) and batches there can be skewed.
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try runBatches(spark, arts, table, pool)
-    finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    // overhead. The streaming wrapper makes the same choice by default
+    // (`StreamingPipeline.Config.batchAdaptive`). The loop also runs
+    // interpreted (see withBatchExecution), measured on this loop:
+    // A9Bench (local[32] on a 4-core host), 6 pairs with alternating
+    // order, median warm run 20.1 → 11.6 s at sf0.01 and 26.1 → 20.6 s
+    // at sf0.1 against the codegen loop (6/6 pairs each).
+    SparkHygiene.withBatchExecution(spark, shufflePartitions = Some(4),
+        adaptive = Some(false)) {
+      runBatches(spark, arts)
     }
   }
 
-  private def runBatches(spark: SparkSession, arts: DataFrame,
-                         table0: DataFrame, pool0: DataFrame): DataFrame = {
-    var table = table0
-    var pool = pool0
+  private def runBatches(spark: SparkSession, arts: DataFrame): DataFrame = {
+    var table = ClusterTable.emptyTable(spark)
+    var pool = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[Row], Schemas.pool)
     for (b <- 0 until Batches) {
       val raw = arts.filter(col("batch") === b).drop("grp", "batch")
       val prepped = Preprocess(raw, EmbedDim)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Block-manager hygiene for checkpoint-per-batch loops.
+/** Block-manager and session-conf hygiene for micro-batch loops.
   *
   * `localCheckpoint(eager = true)` parks the materialized rows in the
   * block manager; Spark frees them only when the ContextCleaner notices
@@ -11,7 +11,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * lags arbitrarily. A micro-batch loop that checkpoints state every
   * batch therefore accumulates every superseded state version until GC
   * happens to run. These helpers free superseded checkpoints
-  * deterministically instead.
+  * deterministically instead, and [[withBatchExecution]] gives a batch
+  * its execution settings without leaving them on the caller's session.
   */
 object SparkHygiene {
 
@@ -75,6 +76,52 @@ object SparkHygiene {
     s2.conf.set("spark.sql.shuffle.partitions", partitions.toString)
     GraftExtensions.register(s2)
     s2
+  }
+
+  /** Runs `body`, one micro-batch's dataflow, under the batch execution
+    * discipline, and puts back each key it sets exactly as it found it:
+    * a key the caller had not set is unset again, not written back as
+    * its default, so `spark.conf.getAll` is the same after the call.
+    *
+    * - Interpreted execution (`spark.sql.codegen.factoryMode=NO_CODEGEN`,
+    *   which turns off expression and whole-stage codegen). A batch plans
+    *   ~150 distinct generated classes, more than Spark's codegen class
+    *   cache holds (the static `spark.sql.codegen.cache.maxEntries`,
+    *   default 100), so with codegen every batch compiled ~200 classes
+    *   again at 10-13 ms each, although nearly all of them were
+    *   byte-identical to the previous batch's. Interpreted, a feed batch
+    *   compiles at most one, and the median batch of the news-stream
+    *   benchmark (4 cores) took ~40% (`open_feed`) and ~30%
+    *   (`cdc_decoupled`) less time. The price: the conf is Spark-internal (documented as not for
+    *   end users), so `StreamingBatchSpec` pins its effect with a compile
+    *   count; and the ε-join's dot product runs through
+    *   `FloatVectorDot.nullSafeEval` (the same arithmetic as its
+    *   generated code), which made the connected-components collect of a
+    *   500 × 508-pair, dim-256 batch slower (391 → 450 ms).
+    * - `shufflePartitions`, when given: a batch is bounded, so host-sized
+    *   exchanges are scheduling overhead.
+    * - `adaptive`, when given: AQE on or off for the batch.
+    *
+    * The keys are set on `spark` itself, so a read the caller runs
+    * alongside on the same session runs interpreted too; a streaming
+    * caller passes its micro-batch's session (the stream's clone). Two
+    * callers whose spans overlap on one session see each other's
+    * settings and can leave a key set for good: the second saves the
+    * first one's value as what it found and puts it back last.
+    */
+  def withBatchExecution[T](spark: SparkSession, shufflePartitions: Option[Int] = None,
+                            adaptive: Option[Boolean] = None)(body: => T): T = {
+    val settings = Seq("spark.sql.codegen.factoryMode" -> "NO_CODEGEN") ++
+      shufflePartitions.map(n => "spark.sql.shuffle.partitions" -> n.toString) ++
+      adaptive.map(a => "spark.sql.adaptive.enabled" -> a.toString)
+    val conf = spark.conf
+    // `getOption` answers an unset key with its default; `getAll` holds
+    // only the keys that are set
+    val set = conf.getAll
+    val found = settings.map { case (k, _) => k -> set.get(k) }
+    settings.foreach { case (k, v) => conf.set(k, v) }
+    try body
+    finally found.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
   }
 
   /** Drop every persistent RDD still registered with the context —

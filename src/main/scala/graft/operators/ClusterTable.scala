@@ -193,12 +193,13 @@ object ClusterTable {
     // old plan's `broadcast(updates)`, so the memory bound is unchanged
     // (fired clusters per batch × capped summary strings); what changes
     // is the JOB SHAPE: rebuilt as a LocalRelation, the updates
-    // broadcast AND the merge anti-key broadcast below stop being
-    // scheduled jobs, and the anti keys no longer re-scan the table to
-    // re-derive (PK, SK) the driver already holds. Two broadcast-
-    // exchange jobs per micro-batch gone; zero-fired batches now skip
-    // the no-op merge pass entirely (identical rows either way — the
-    // anti join against an empty key set passed everything through).
+    // broadcast and the merge anti-key broadcast below no longer rerun
+    // the updates plan, and the anti keys no longer re-scan the table
+    // to re-derive (PK, SK) the driver already holds. Each of the two
+    // broadcasts is still one 1-stage job at the table write (on Spark
+    // 4.1.2 every broadcast of a LocalRelation is). Zero-fired batches
+    // skip the no-op merge pass entirely (identical rows either way —
+    // the anti join against an empty key set passed everything through).
     val updatesRows = updatesPlan.collect()
     if (updatesRows.isEmpty) return table
     val updates = spark.createDataFrame(

@@ -136,13 +136,12 @@ object ConnectedComponents {
   /** Path-compressed union-find with min-id roots — the local fast path.
     * O((n+m)·α) on a batch-bounded graph; result returned as a LOCAL
     * relation, not a parallelized RDD (optimization r15, guide §1.2):
-    * the rows already live on the driver, and a broadcast exchange over
-    * a LocalTableScan collects driver-side without scheduling a job —
-    * the former 1-slice parallelize made every downstream
-    * `broadcast(comp)` a scheduled job (two per micro-batch in the
-    * clustering loop, ~0.1-0.2 s each of pure scheduler latency). A
-    * LocalRelation also carries real size stats, where a LogicalRDD
-    * pessimistically defaults to "huge".
+    * the rows already live on the driver. A downstream
+    * `broadcast(comp)` is still a scheduled job: on Spark 4.1.2 each
+    * broadcast of a LocalRelation runs one 1-stage job, two per
+    * micro-batch in the clustering loop. A LocalRelation also carries
+    * real size stats, where a LogicalRDD pessimistically defaults to
+    * "huge".
     */
   private def localUnionFind(spark: SparkSession, nodes: Array[Long],
                              edges: Array[(Long, Long)]): DataFrame = {

@@ -85,8 +85,10 @@ object CdcConsumer {
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (_: DataFrame, _: Long) =>
-        runOnce(spark, stateDir, threshold, store); ()
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        // the stream's own session clone: the pass's conf changes stay
+        // off the caller's session, which keeps serving reads meanwhile
+        runOnce(b.sparkSession, stateDir, threshold, store); ()
       }
       .start()
 
@@ -94,11 +96,20 @@ object CdcConsumer {
     * for their PKs against the newest committed table version and
     * publish its summarized overlay (refreshing the serving store's
     * fired buckets, when given). Returns the versions consumed this
-    * call — empty when the feed is drained.
+    * call — empty when the feed is drained. The pass runs interpreted
+    * under [[graft.SparkHygiene.withBatchExecution]]; its shuffle and
+    * AQE settings are the session's.
     */
   def runOnce(spark: SparkSession, stateDir: String, threshold: Int = 5,
               store: Option[ClusterStore] = None,
-              retainVersions: Int = 3, gracePasses: Int = 1): Seq[Long] = {
+              retainVersions: Int = 3, gracePasses: Int = 1): Seq[Long] =
+    graft.SparkHygiene.withBatchExecution(spark) {
+      consume(spark, stateDir, threshold, store, retainVersions, gracePasses)
+    }
+
+  private def consume(spark: SparkSession, stateDir: String, threshold: Int,
+                      store: Option[ClusterStore], retainVersions: Int,
+                      gracePasses: Int): Seq[Long] = {
     val tableBase = s"$stateDir/table"
     val tables = StreamingPipeline.committedVersions(spark, tableBase)
     val p = pending(spark, stateDir)

@@ -65,15 +65,18 @@ object StreamingPipeline {
         * is repaired by the replay (self-healing). */
       servingStore: Option[graft.operators.ClusterStore] = None,
       /** Shuffle partitions for the per-batch dataflow (None = session
-        * value). A micro-batch is bounded, so host-sized exchanges are
-        * pure scheduling overhead and every state write fans into that
-        * many files — the batch analog of the catalog drains'
-        * streamStateSession sizing (optimization r15, guide §2.2; the
-        * interleaved wrapper probe measured 32 host-sized partitions at
-        * zero benefit over 8). At real volumes a deployment raises it —
-        * this is the knob, made explicit. */
+        * value), set for the span of the batch by
+        * [[graft.SparkHygiene.withBatchExecution]]. A micro-batch is
+        * bounded, so host-sized exchanges are pure scheduling overhead
+        * and every state write fans into that many files — the batch
+        * analog of the catalog drains' streamStateSession sizing
+        * (optimization r15, guide §2.2; the interleaved wrapper probe
+        * measured 32 host-sized partitions at zero benefit over 8). At
+        * real volumes a deployment raises it — this is the knob, made
+        * explicit. */
       batchShufflePartitions: Option[Int] = None,
-      /** AQE for the per-batch dataflow. Default OFF, measured
+      /** AQE for the per-batch dataflow, set for the span of the batch
+        * by [[graft.SparkHygiene.withBatchExecution]]. Default OFF, measured
         * (optimization r15, the NewsPipeline r4 lesson reproduced on
         * the wrapper: every join in the batch dataflow carries an
         * explicit broadcast hint on its batch-bounded side, so static
@@ -225,23 +228,18 @@ object StreamingPipeline {
     * checkpoints, the clustering step's outputs and the persisted
     * preprocessed batch are released when the batch ends, on every exit
     * path, so a batch leaves no cache pinned.
+    *
+    * The batch runs interpreted, with the configured shuffle and AQE
+    * settings, under [[graft.SparkHygiene.withBatchExecution]].
     */
   def processBatch(batch: DataFrame, batchId: Long, stateDir: String,
                    cfg: Config = Config()): Unit = {
-    val spark = batch.sparkSession
-    // per-batch execution discipline (see Config.batchShufflePartitions/
-    // batchAdaptive): applied to the stream's own session for the span
-    // of the batch and restored after — foreachBatch hands us the
-    // streaming clone, but tests drive processBatch on shared sessions
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    cfg.batchShufflePartitions.foreach(n =>
-      spark.conf.set("spark.sql.shuffle.partitions", n.toString))
-    spark.conf.set("spark.sql.adaptive.enabled", cfg.batchAdaptive.toString)
-    try processBatchInner(batch, batchId, stateDir, cfg)
-    finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    // foreachBatch hands us the stream's own session clone, but tests
+    // drive processBatch on shared sessions: the helper leaves the
+    // session's conf as it found it either way
+    graft.SparkHygiene.withBatchExecution(batch.sparkSession,
+        cfg.batchShufflePartitions, Some(cfg.batchAdaptive)) {
+      processBatchInner(batch, batchId, stateDir, cfg)
     }
   }
 

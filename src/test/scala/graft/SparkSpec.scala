@@ -45,13 +45,19 @@ trait SparkSpec extends AnyFunSuite {
     try body
     finally {
       sc.clearJobGroup()
-      // listener events arrive asynchronously: drain the bus (internal
-      // to Spark, hence the reflective call) before reading the count
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      drainListenerBus()
       sc.removeSparkListener(listener)
     }
     n.get()
+  }
+
+  /** Listener events arrive asynchronously: drain the bus (internal to
+    * Spark, hence the reflective call) before reading what a listener
+    * saw. */
+  def drainListenerBus(): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
   }
 
   /** (id, vector) batch frame in the clusterer's input shape. */

@@ -1,17 +1,22 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
 import scala.util.Random
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.ClusterStore
 import graft.streaming.{CdcConsumer, StreamingPipeline}
 
 /** The micro-batch's execution contract: how many Spark jobs one
-  * `processBatch` schedules, that it leaves no cache pinned on any exit
-  * path, and that its configuration fails fast.
+  * `processBatch` schedules and how few classes it compiles, that it
+  * leaves no cache pinned on any exit path and the session's conf as it
+  * found it, and that its configuration fails fast.
   */
 class StreamingBatchSpec extends SparkSpec {
   import spark.implicits._
@@ -19,7 +24,7 @@ class StreamingBatchSpec extends SparkSpec {
   /** One 500-article micro-batch shaped like a live feed: singletons
     * plus 8 syndicated stories of 7 copies each, so at threshold 5 the
     * inline summarize pass fires 8 clusters. Deterministic per `seed`. */
-  private def feedBatch(seed: Long): DataFrame = {
+  private def feedBatch(seed: Long, session: SparkSession = spark): DataFrame = {
     val rnd = new Random(seed)
     def word() = (1 to 3 + rnd.nextInt(6)).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString
     def text() = Seq.fill(40 + rnd.nextInt(40))(word()).mkString(" ")
@@ -28,7 +33,7 @@ class StreamingBatchSpec extends SparkSpec {
       yield (s"b${seed}_s${s}_c$c", t, s"Story $s copy $c", "2024-01-01 10:00:00")
     val singles = (0 until 500 - syndicated.size).map(i =>
       (s"b${seed}_a$i", text(), s"Article $i", f"2024-01-02 ${i % 24}%02d:00:00"))
-    (syndicated ++ singles).toDF("id", "text", "title", "date")
+    session.createDataFrame(syndicated ++ singles).toDF("id", "text", "title", "date")
   }
 
   private def persistedIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
@@ -42,13 +47,32 @@ class StreamingBatchSpec extends SparkSpec {
     out
   }
 
-  /** Jobs of the second of two feed batches (the first builds state). */
-  private def secondBatchJobs(cfg: StreamingPipeline.Config): (Int, String) = {
+  /** Generated classes Spark compiled while `body` ran, by the
+    * codegen compile counter. A batch runs interpreted
+    * (`SparkHygiene.withBatchExecution`); this count is what shows the
+    * Spark-internal conf behind that still takes effect. */
+  private def compilesOf(body: => Unit): Long = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    body
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+  }
+
+  /** Most generated classes a batch or a consumer pass may compile. With
+    * codegen the second feed batch compiled ~200: its working set of
+    * ~150 classes overflows Spark's 100-entry class cache every batch. */
+  private val MaxCompiles = 10
+
+  /** Jobs and compiled classes of the second of two feed batches (the
+    * first builds state). */
+  private def secondBatch(cfg: StreamingPipeline.Config): (Int, Long, String) = {
     val state = Files.createTempDirectory("graft-batch-jobs").toString
     leavesNothingPinned(StreamingPipeline.processBatch(feedBatch(1L), 0L, state, cfg))
-    val jobs = leavesNothingPinned(
-      jobsOf(StreamingPipeline.processBatch(feedBatch(2L), 1L, state, cfg)))
-    (jobs, state)
+    val batch = feedBatch(2L)
+    var jobs = 0
+    val compiles = compilesOf {
+      jobs = leavesNothingPinned(jobsOf(StreamingPipeline.processBatch(batch, 1L, state, cfg)))
+    }
+    (jobs, compiles, state)
   }
 
   private def summarized(state: String): Long =
@@ -61,24 +85,27 @@ class StreamingBatchSpec extends SparkSpec {
   private val SeedDecoupledJobs = 27
 
   test("inline micro-batch: fewer jobs than before, no cache left pinned") {
-    val (jobs, state) = secondBatchJobs(StreamingPipeline.Config(threshold = 5))
-    info(s"inline processBatch jobs: $jobs (was $SeedInlineJobs)")
-    assert(jobs < SeedInlineJobs)
+    val (jobs, compiles, state) = secondBatch(StreamingPipeline.Config(threshold = 5))
+    info(s"inline processBatch jobs: $jobs (was $SeedInlineJobs), compiled classes: $compiles")
+    assert(jobs == 24)
+    assert(compiles <= MaxCompiles)
     // non-vacuous: both batches' 8 syndicated stories fired
     assert(summarized(state) == 16)
   }
 
   test("decoupled micro-batch (change feed, no inline summarize): fewer jobs " +
     "than before, no cache left pinned") {
-    val (jobs, state) = secondBatchJobs(StreamingPipeline.Config(threshold = 5,
+    val (jobs, compiles, state) = secondBatch(StreamingPipeline.Config(threshold = 5,
       inlineSummarize = false, emitCdc = true))
-    info(s"decoupled processBatch jobs: $jobs (was $SeedDecoupledJobs)")
-    assert(jobs < SeedDecoupledJobs)
+    info(s"decoupled processBatch jobs: $jobs (was $SeedDecoupledJobs), " +
+      s"compiled classes: $compiles")
+    assert(jobs == 19)
+    assert(compiles <= MaxCompiles)
     assert(summarized(state) == 0)
   }
 
   test("latestTable schedules no Spark job and reads the written schema") {
-    val (_, state) = secondBatchJobs(StreamingPipeline.Config(threshold = 5))
+    val (_, _, state) = secondBatch(StreamingPipeline.Config(threshold = 5))
     val inferred = spark.read.parquet(s"$state/table/v1")
     var table: DataFrame = null
     val jobs = jobsOf { table = StreamingPipeline.latestTable(spark, state) }
@@ -101,11 +128,15 @@ class StreamingBatchSpec extends SparkSpec {
     StreamingPipeline.processBatch(feedBatch(2L), 1L, state, cfg)
     val store = new ClusterStore(spark, s"$state/store")
     var consumed = Seq.empty[Long]
-    val jobs = leavesNothingPinned(
-      jobsOf { consumed = CdcConsumer.runOnce(spark, state, threshold = 5, store = Some(store)) })
-    info(s"CdcConsumer.runOnce jobs: $jobs (was $SeedCdcJobs)")
+    var jobs = 0
+    val compiles = compilesOf {
+      jobs = leavesNothingPinned(
+        jobsOf { consumed = CdcConsumer.runOnce(spark, state, threshold = 5, store = Some(store)) })
+    }
+    info(s"CdcConsumer.runOnce jobs: $jobs (was $SeedCdcJobs), compiled classes: $compiles")
     assert(consumed == Seq(0L, 1L))
-    assert(jobs < SeedCdcJobs)
+    assert(jobs == 20)
+    assert(compiles <= MaxCompiles)
     // non-vacuous: both batches' 8 syndicated stories fired
     assert(summarized(state) == 16)
   }
@@ -115,6 +146,7 @@ class StreamingBatchSpec extends SparkSpec {
     // a plain file where the change feed's directory belongs: the feed
     // write, after the pool and table versions are written, fails
     Files.writeString(Paths.get(state, "cdc"), "not a directory")
+    val conf = spark.conf.getAll
     leavesNothingPinned {
       intercept[Exception] {
         StreamingPipeline.processBatch(feedBatch(3L), 0L, state,
@@ -123,6 +155,79 @@ class StreamingBatchSpec extends SparkSpec {
     }
     assert(Files.exists(Paths.get(state, "table", "v0", "_SUCCESS")),
       "the batch should fail after its table write, not before")
+    assert(spark.conf.getAll == conf)
+  }
+
+  /** The keys the batch execution discipline sets. */
+  private val BatchKeys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled",
+    "spark.sql.codegen.factoryMode")
+
+  /** Runs a decoupled feed batch, a consumer pass over its feed and the
+    * a9 batch pipeline on a fresh session whose batch keys are `preset`
+    * (None: unset), and asserts each call leaves `getAll` as it was. */
+  private def leavesConfAsFound(preset: Map[String, Option[String]]): Unit = {
+    val s = spark.newSession()
+    GraftExtensions.register(s)
+    // the a9 pipeline's input: 16 documents per batch
+    val docs = Files.createTempDirectory("graft-batch-docs").toString
+    s.createDataFrame((0L until 80L).map(i => (i, s"document $i text"))).toDF("doc_id", "text")
+      .write.parquet(s"$docs/documents.parquet")
+    preset.foreach { case (k, v) => v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
+    val conf = s.conf.getAll
+    preset.foreach { case (k, v) => assert(conf.get(k) == v, k) }
+    def unchanged(what: String)(body: => Unit): Unit = {
+      body
+      assert(s.conf.getAll == conf, s"$what changed the session conf")
+    }
+    val state = Files.createTempDirectory("graft-batch-conf").toString
+    unchanged("processBatch") {
+      StreamingPipeline.processBatch(feedBatch(4L, s), 0L, state, StreamingPipeline.Config(
+        threshold = 5, inlineSummarize = false, emitCdc = true,
+        batchShufflePartitions = Some(2)))
+    }
+    unchanged("CdcConsumer.runOnce") {
+      assert(CdcConsumer.runOnce(s, state, threshold = 5) == Seq(0L))
+    }
+    unchanged("NewsPipeline.run") {
+      val table = NewsPipeline.run(s, docs)
+      assert(table.filter($"row_type" === "metadata").count() == NewsPipeline.Groups)
+      SparkHygiene.freeCheckpoint(table)
+    }
+  }
+
+  test("processBatch, CdcConsumer.runOnce and NewsPipeline.run leave unset conf keys unset") {
+    leavesConfAsFound(BatchKeys.map(_ -> None).toMap)
+  }
+
+  test("processBatch, CdcConsumer.runOnce and NewsPipeline.run restore preset conf keys") {
+    leavesConfAsFound(Map(
+      "spark.sql.shuffle.partitions" -> Some("3"),
+      "spark.sql.adaptive.enabled" -> Some("true"),
+      "spark.sql.codegen.factoryMode" -> Some("FALLBACK")))
+  }
+
+  test("CdcConsumer.stream runs its passes on the stream's session, not the caller's") {
+    val s = spark.newSession()
+    GraftExtensions.register(s)
+    val state = Files.createTempDirectory("graft-batch-stream").toString
+    StreamingPipeline.processBatch(feedBatch(5L, s), 0L, state, StreamingPipeline.Config(
+      threshold = 5, inlineSummarize = false, emitCdc = true))
+    // the caller's factory mode, sampled at each job start while the
+    // stream runs: the caller keeps serving reads on its session then
+    val seen = new ConcurrentLinkedQueue[Option[String]]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(s.conf.getAll.get("spark.sql.codegen.factoryMode"))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try CdcConsumer.stream(s, state, s"$state-ck", threshold = 5).awaitTermination()
+    finally {
+      drainListenerBus()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(CdcConsumer.pending(s, state).isEmpty, "the stream should consume the feed")
+    assert(!seen.isEmpty && seen.asScala.forall(_.isEmpty),
+      s"the caller's session ran part of the pass interpreted: ${seen.asScala.toSeq.distinct}")
   }
 
   test("Config rejects retainVersions < 1, naming the field and the value") {
