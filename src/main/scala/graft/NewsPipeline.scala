@@ -110,7 +110,6 @@ object NewsPipeline {
       table = ClusterTable.summarizePass(merged, updated, Threshold)
         .localCheckpoint(eager = true)
       SparkHygiene.freeCheckpoint(merged)
-      SparkHygiene.freeCheckpoint(step.assignments)
       prepped.unpersist()
     }
     table

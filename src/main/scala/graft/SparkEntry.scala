@@ -65,6 +65,14 @@ object QueryCatalog {
       .filter(cond)
   }
 
+  /** The shuffle-join regime under which the runtime bloom filter is
+    * injected (q31, q35): the rule refuses injection when the creation
+    * side is broadcastable by size. */
+  private val BloomRegime = Seq(
+    "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+
   private val baseQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q1_agg" -> ((s, dir) =>
       Tables.lineitem(s, dir)
@@ -1189,10 +1197,7 @@ object QueryCatalog {
     // returning; broadcast disabled during the build (a broadcast
     // would bypass the bucketing) and restored after.
     "j18_bucketed_join" -> ((s, dir) => {
-      val conf = s.conf
-      val saved = conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      SparkHygiene.withConf(s, Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1")) {
         val pa = SparkHygiene.scratchDir("j18_orders")
         val pb = SparkHygiene.scratchDir("j18_lineitem")
         s.sql("DROP TABLE IF EXISTS graft_j18_orders")
@@ -1218,8 +1223,7 @@ object QueryCatalog {
         s.sql("DROP TABLE graft_j18_orders")
         s.sql("DROP TABLE graft_j18_lineitem")
         res.orderBy(col("o_orderpriority"))
-      } finally saved.fold(conf.unset("spark.sql.autoBroadcastJoinThreshold"))(
-        conf.set("spark.sql.autoBroadcastJoinThreshold", _))
+      }
     }),
 
     // STORAGE-PARTITIONED JOIN (SPARK-37377) — j18's property carried
@@ -1236,15 +1240,14 @@ object QueryCatalog {
     // the bucketed key into a metadata handshake. The oracle is the
     // plain join — layout must be logically invisible.
     "j23_spj" -> ((s, dir) => {
-      val conf = s.conf
-      val saved = Seq("spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.sources.v2.bucketing.enabled")
-        .map(k => k -> conf.getOption(k))
-      try {
-        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-        conf.set("spark.sql.catalog.graft_spj",
-          classOf[graft.sources.v2.SnapshotCatalog].getName)
+      // the result is materialized, so the snapshot reads' id-mapping
+      // keys (set by Snapshots.idMappedRead) are scoped here too
+      SparkHygiene.withConf(s, Seq(
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.sources.v2.bucketing.enabled" -> "true",
+          "spark.sql.catalog.graft_spj" -> classOf[graft.sources.v2.SnapshotCatalog].getName,
+          "spark.sql.parquet.fieldId.read.enabled" -> "true",
+          "spark.sql.parquet.fieldId.read.ignoreMissing" -> "true")) {
         val ta = SparkHygiene.scratchDir("j23_orders")
         val tb = SparkHygiene.scratchDir("j23_lineitem")
         graft.sources.Snapshots.commit(s, ta,
@@ -1262,8 +1265,6 @@ object QueryCatalog {
               .cast("double").as("qty"))
           .localCheckpoint(true)
         res.orderBy(col("o_orderpriority"))
-      } finally saved.foreach { case (k, v) =>
-        v.fold(conf.unset(k))(conf.set(k, _))
       }
     }),
 
@@ -1281,19 +1282,7 @@ object QueryCatalog {
     // The filter is semantics-free: the oracle is the plain join.
     // PlanSpec pins the might_contain injection on the fact scan.
     "q31_runtime_filter" -> ((s, dir) => {
-      val conf = s.conf
-      val keys = Seq(
-        "spark.sql.optimizer.runtime.bloomFilter.enabled",
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        "spark.sql.autoBroadcastJoinThreshold")
-      val saved = keys.map(k => k -> conf.getOption(k))
-      try {
-        conf.set(keys(0), "true")
-        conf.set(keys(1), "0")
-        // the bloom rule refuses injection when the creation side is
-        // broadcastable by size (the join would be BHJ) — flip the
-        // session to the shuffle-join regime q31 documents
-        conf.set(keys(2), "-1")
+      SparkHygiene.withConf(s, BloomRegime) {
         val urgent = Tables.orders(s, dir)
           .filter(col("o_orderpriority") === "1-URGENT")
           .select(col("o_orderkey"))
@@ -1305,8 +1294,6 @@ object QueryCatalog {
               .cast("double").as("qty"))
           .localCheckpoint(true)
           .orderBy(col("l_returnflag"))
-      } finally saved.foreach { case (k, v) =>
-        v.fold(conf.unset(k))(conf.set(k, _))
       }
     }),
 
@@ -1346,21 +1333,9 @@ object QueryCatalog {
         groupCols = Set("l_returnflag", "l_linestatus"),
         countCol = "n_rows",
         sumCols = Map("l_quantity" -> "sum_qty")))
-      val conf = s.conf
-      val keys = Seq(
-        "spark.sql.optimizer.runtime.bloomFilter.enabled",
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        "spark.sql.autoBroadcastJoinThreshold")
-      val saved = keys.map(k => k -> conf.getOption(k))
-      try {
-        conf.set(keys(0), "true")
-        conf.set(keys(1), "0")
-        // the bloom rule refuses injection when the creation side is
-        // broadcastable by size (the join would be BHJ) — flip the
-        // session to the shuffle-join regime q31 documents; the detail
-        // arm keeps its DPP via the explicit broadcast(dim) hint, which
-        // overrides the threshold
-        conf.set(keys(2), "-1")
+      // q31's shuffle-join regime; the detail arm keeps its DPP via the
+      // explicit broadcast(dim) hint, which overrides the threshold
+      try SparkHygiene.withConf(s, BloomRegime) {
         // arm 1: bare fact rollup — MV-served
         val rollup = Tables.lineitem(s, dir)
           .groupBy(col("l_returnflag"))
@@ -1395,10 +1370,7 @@ object QueryCatalog {
         rollup.unionByName(detail).unionByName(bloom)
           .localCheckpoint(true)
           .orderBy(col("arm"), col("key"))
-      } finally {
-        saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
-        graft.plans.MvRewrite.clear(s)
-      }
+      } finally graft.plans.MvRewrite.clear(s)
     }),
 
     // Correlated SCALAR subquery in the SELECT list — the fourth

@@ -25,17 +25,6 @@ object SparkHygiene {
     case _ => ()
   }
 
-  /** Free EVERY checkpoint block referenced anywhere in the frame's
-    * lineage. Only for frames whose entire lineage the caller owns and
-    * has finished consuming — a checkpoint shared with a live frame
-    * would lose its storage (it recomputes from lineage... which a
-    * checkpoint no longer has).
-    */
-  def freeCheckpointsIn(df: Dataset[_]): Unit =
-    df.queryExecution.analyzed.collect {
-      case l: LogicalRDD => l.rdd.unpersist(blocking = false)
-    }
-
   /** Temp directory that is recursively deleted at JVM exit — for
     * streaming catalog entries that must drain a query to a filesystem
     * sink before the caller can read the result back. `deleteOnExit`
@@ -79,9 +68,8 @@ object SparkHygiene {
   }
 
   /** Runs `body`, one micro-batch's dataflow, under the batch execution
-    * discipline, and puts back each key it sets exactly as it found it:
-    * a key the caller had not set is unset again, not written back as
-    * its default, so `spark.conf.getAll` is the same after the call.
+    * discipline, set through [[withConf]], so `spark.conf.getAll` is the
+    * same after the call.
     *
     * - Interpreted execution (`spark.sql.codegen.factoryMode=NO_CODEGEN`,
     *   which turns off expression and whole-stage codegen). A batch plans
@@ -110,10 +98,16 @@ object SparkHygiene {
     * first one's value as what it found and puts it back last.
     */
   def withBatchExecution[T](spark: SparkSession, shufflePartitions: Option[Int] = None,
-                            adaptive: Option[Boolean] = None)(body: => T): T = {
-    val settings = Seq("spark.sql.codegen.factoryMode" -> "NO_CODEGEN") ++
+                            adaptive: Option[Boolean] = None)(body: => T): T =
+    withConf(spark, Seq("spark.sql.codegen.factoryMode" -> "NO_CODEGEN") ++
       shufflePartitions.map(n => "spark.sql.shuffle.partitions" -> n.toString) ++
-      adaptive.map(a => "spark.sql.adaptive.enabled" -> a.toString)
+      adaptive.map(a => "spark.sql.adaptive.enabled" -> a.toString))(body)
+
+  /** Runs `body` with `settings` set on `spark`'s conf, then puts back
+    * each key exactly as it found it: a key the caller had not set is
+    * unset again, not written back as its default, so `spark.conf.getAll`
+    * is the same after the call. */
+  def withConf[T](spark: SparkSession, settings: Seq[(String, String)])(body: => T): T = {
     val conf = spark.conf
     // `getOption` answers an unset key with its default; `getAll` holds
     // only the keys that are set

@@ -49,6 +49,11 @@ object VectorMean {
         org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Float]]()
     }
 
+  /** The aggregator's mean of `vs` reduced in the given order, for a
+    * group that is already on the driver (the clusterer's merge). */
+  def mean(vs: Iterable[Array[Float]]): Array[Float] =
+    aggregator.finish(vs.foldLeft(aggregator.zero)(aggregator.reduce))
+
   /** Column form: `VectorMean(col("centroid"))`. */
   def apply(c: Column): Column = udaf(aggregator).apply(c)
 }

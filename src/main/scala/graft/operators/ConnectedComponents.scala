@@ -26,14 +26,10 @@ object ConnectedComponents {
   /** Size gate for the local union-find fast path: graphs at or below
     * this many nodes AND edges are solved driver-side in one bounded
     * collect instead of ~4 scheduled jobs per propagation round. The
-    * clusterer's touched set is batch-bounded by construction
-    * (micro-batch ∪ its ε-neighbors; edges can reach (batch/groups)² for
-    * within-batch cliques — ~10⁵ for a 1 000-article batch), so in
-    * steady state every batch takes this path; the probe is a single
-    * tag-unioned `limit(gate+1)` collect over both sides — bounded
-    * memory (~32 MB of longs at the gate) even when the graph is huge —
-    * and anything larger falls back to the distributed propagation
-    * below.
+    * probe is a single tag-unioned `limit(gate+1)` collect over both
+    * sides — bounded memory (~32 MB of longs at the gate) even when the
+    * graph is huge — and anything larger falls back to the distributed
+    * propagation below.
     */
   val LocalGate = 1 << 20
 
@@ -133,20 +129,13 @@ object ConnectedComponents {
     labels
   }
 
-  /** Path-compressed union-find with min-id roots — the local fast path.
-    * O((n+m)·α) on a batch-bounded graph; result returned as a LOCAL
-    * relation, not a parallelized RDD (optimization r15, guide §1.2):
-    * the rows already live on the driver. A downstream
-    * `broadcast(comp)` is still a scheduled job: on Spark 4.1.2 each
-    * broadcast of a LocalRelation runs one 1-stage job, two per
-    * micro-batch in the clustering loop. A LocalRelation also carries
-    * real size stats, where a LogicalRDD pessimistically defaults to
-    * "huge".
+  /** Min-id roots of the undirected graph `edges`, by path-compressed
+    * union-find: every node that appears in an edge, mapped to the
+    * smallest node id connected to it — the labels the propagation
+    * above converges to. O(m·α) on the driver or inside one task.
     */
-  private def localUnionFind(spark: SparkSession, nodes: Array[Long],
-                             edges: Array[(Long, Long)]): DataFrame = {
-    import scala.collection.mutable
-    val parent = mutable.LongMap.empty[Long]
+  def roots(edges: Iterator[(Long, Long)]): scala.collection.Map[Long, Long] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
     def find(x: Long): Long = {
       var r = x
       while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
@@ -154,17 +143,30 @@ object ConnectedComponents {
       while (parent.getOrElse(c, c) != r) { val n = parent.getOrElse(c, c); parent(c) = r; c = n }
       r
     }
-    def union(a: Long, b: Long): Unit = {
+    edges.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
       val ra = find(a); val rb = find(b)
-      if (ra != rb) {
-        // min id wins the root, matching the propagation semantics
-        if (ra < rb) parent(rb) = ra else parent(ra) = rb
-      }
+      // min id wins the root, matching the propagation semantics
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
     }
-    edges.foreach { case (s, d) => union(s, d) }
+    // compress every path, so each node maps to its root directly
+    parent.keys.toArray.foreach(find)
+    parent
+  }
+
+  /** The local fast path: [[roots]] over the collected edges, returned
+    * as a LOCAL relation, not a parallelized RDD (optimization r15,
+    * guide §1.2): the rows already live on the driver. A LocalRelation
+    * also carries real size stats, where a LogicalRDD pessimistically
+    * defaults to "huge"; a `broadcast` of it is still one scheduled job
+    * on Spark 4.1.2.
+    */
+  private def localUnionFind(spark: SparkSession, nodes: Array[Long],
+                             edges: Array[(Long, Long)]): DataFrame = {
+    val root = roots(edges.iterator)
     val rows: java.util.List[org.apache.spark.sql.Row] =
       java.util.Arrays.asList(
-        nodes.map(n => org.apache.spark.sql.Row(n, find(n))): _*)
+        nodes.map(n => org.apache.spark.sql.Row(n, root.getOrElse(n, n))): _*)
     spark.createDataFrame(rows,
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("node", org.apache.spark.sql.types.LongType, nullable = false),

@@ -268,16 +268,16 @@ object StreamingPipeline {
       c
     }
     try {
-      if (prepped.isEmpty) {
+      val step = Clustering.step(
+        pool, prepped.select(col("id"), col("concat_embedding")),
+        Clustering.Config(eps = cfg.eps, strategy = cfg.strategy,
+          singletonTtl = cfg.singletonTtl))
+      checkpoints += step.pool
+      if (step.batchSize == 0) {
         // still publish the state version so restore finds a contiguous chain
         pool.write.mode("overwrite").parquet(versionPath(poolBase, batchId))
         table.write.mode("overwrite").parquet(versionPath(tableBase, batchId))
       } else {
-        val step = Clustering.step(
-          pool, prepped.select(col("id"), col("concat_embedding")),
-          Clustering.Config(eps = cfg.eps, strategy = cfg.strategy,
-            singletonTtl = cfg.singletonTtl))
-        checkpoints ++= Seq(step.pool, step.assignments)
         // A5 pool statistics as OBSERVED metrics (reference recalculated
         // stats every batch, `process_records.py:313-319,427-434`):
         // observe() piggybacks on the state write — zero extra jobs —

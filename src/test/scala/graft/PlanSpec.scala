@@ -17,6 +17,19 @@ class PlanSpec extends SparkSpec {
   private def plan(name: String): String =
     QueryCatalog.queries(name)(spark, sf).queryExecution.executedPlan.toString
 
+  test("j18, j23, q31 and q35 leave the session conf as they found it") {
+    val s = spark.newSession()
+    GraftExtensions.register(s)
+    // every key the entries set unset, then one of them preset
+    for (preset <- Seq(None, Some("12345"));
+         name <- Seq("j18_bucketed_join", "j23_spj", "q31_runtime_filter", "q35_rule_compose")) {
+      preset.foreach(s.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
+      val conf = s.conf.getAll
+      QueryCatalog.queries(name)(s, sf).collect()
+      assert(s.conf.getAll == conf, s"$name changed the session conf (preset: $preset)")
+    }
+  }
+
   test("p2_clean_text scan prunes to the two referenced columns") {
     val p = plan("p2_clean_text")
     assert(p.contains("ReadSchema: struct<doc_id:bigint,text:string>"),

@@ -75,6 +75,19 @@ class StreamingBatchSpec extends SparkSpec {
     (jobs, compiles, state)
   }
 
+  /** Part files of the pool and table versions both feed batches wrote. */
+  private def partFiles(state: String): Map[String, Int] =
+    (for (base <- Seq("pool", "table"); v <- Seq(0, 1)) yield
+      s"$base/v$v" -> Files.list(Paths.get(state, base, s"v$v")).iterator.asScala
+        .count(_.getFileName.toString.startsWith("part-"))).toMap
+
+  /** Asserts no version has more files than the distributed merge wrote. */
+  private def noMoreFilesThan(was: Map[String, Int], state: String): Unit = {
+    val files = partFiles(state)
+    info(s"part files: $files (was $was)")
+    was.foreach { case (v, n) => assert(files(v) <= n, s"$v: ${files(v)} files, was $n") }
+  }
+
   private def summarized(state: String): Long =
     StreamingPipeline.latestTable(spark, state)
       .filter($"row_type" === "metadata" && $"generated_summary" =!= "").count()
@@ -84,11 +97,19 @@ class StreamingBatchSpec extends SparkSpec {
   private val SeedInlineJobs = 45
   private val SeedDecoupledJobs = 27
 
+  // Part files of the feed batches' versions when the clustering merge
+  // ran as a distributed dataflow (inline 24 jobs, decoupled 19).
+  private val DistributedMergeInlineFiles =
+    Map("pool/v0" -> 5, "pool/v1" -> 6, "table/v0" -> 2, "table/v1" -> 4)
+  private val DistributedMergeDecoupledFiles =
+    Map("pool/v0" -> 5, "pool/v1" -> 6, "table/v0" -> 1, "table/v1" -> 2)
+
   test("inline micro-batch: fewer jobs than before, no cache left pinned") {
     val (jobs, compiles, state) = secondBatch(StreamingPipeline.Config(threshold = 5))
     info(s"inline processBatch jobs: $jobs (was $SeedInlineJobs), compiled classes: $compiles")
-    assert(jobs == 24)
+    assert(jobs == 16)
     assert(compiles <= MaxCompiles)
+    noMoreFilesThan(DistributedMergeInlineFiles, state)
     // non-vacuous: both batches' 8 syndicated stories fired
     assert(summarized(state) == 16)
   }
@@ -99,8 +120,9 @@ class StreamingBatchSpec extends SparkSpec {
       inlineSummarize = false, emitCdc = true))
     info(s"decoupled processBatch jobs: $jobs (was $SeedDecoupledJobs), " +
       s"compiled classes: $compiles")
-    assert(jobs == 19)
+    assert(jobs == 11)
     assert(compiles <= MaxCompiles)
+    noMoreFilesThan(DistributedMergeDecoupledFiles, state)
     assert(summarized(state) == 0)
   }
 
