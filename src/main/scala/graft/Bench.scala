@@ -453,22 +453,16 @@ object Bench {
       // OPTIMIZATION_r15.md).
       val stateParts = positiveIntEnv(sys.env, "SPARK_GRAFT_STREAM_SHUFFLE", 8)
       val s2 = SparkHygiene.streamStateSession(spark, stateParts)
+      val cfg = NewsPipeline.BatchConfig.copy(inlineSummarize = !decoupled,
+        emitCdc = decoupled, batchShufflePartitions = Some(stateParts))
       val t0 = System.nanoTime()
       streaming.StreamingPipeline.start(
         s2.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").json(inDir),
-        s"$tmp/state", s"$tmp/ck",
-        streaming.StreamingPipeline.Config(
-          threshold = NewsPipeline.Threshold,
-          embedDim = NewsPipeline.EmbedDim,
-          clock = NewsPipeline.Clock,
-          inlineSummarize = !decoupled,
-          emitCdc = decoupled,
-          batchShufflePartitions = Some(stateParts)))
+        s"$tmp/state", s"$tmp/ck", cfg)
         .awaitTermination()
       if (decoupled)
-        streaming.CdcConsumer.stream(s2, s"$tmp/state", s"$tmp/ck2",
-          threshold = NewsPipeline.Threshold)
+        streaming.CdcConsumer.stream(s2, s"$tmp/state", s"$tmp/ck2", cfg.threshold)
           .awaitTermination()
       (System.nanoTime() - t0) / 1e9
     } finally {

@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{ClusterTable, Clustering, Preprocess}
-import graft.schemas.Schemas
+import graft.operators.ClusterTable
+import graft.streaming.StreamingPipeline
 
 /** The flagship end-to-end pipeline (SURVEY §3 E1-E3, §7.1 v0 slice):
   * raw articles → preprocess (P1-P6) → deterministic embed (P7) →
@@ -53,66 +53,46 @@ object NewsPipeline {
         concat(lit("locx"), (col("doc_id") % 3).cast("string"))).as("locations"))
   }
 
-  /** Run the full pipeline over `Batches` micro-batches; returns the
-    * final clusters table. The driver-side loop IS the micro-batch
-    * boundary (same role as `foreachBatch` in the streaming wrapper).
+  /** The a9 pipeline's micro-batch settings. The shuffle is sized to
+    * the bounded batch, not the session, and AQE is off: every join in
+    * the batch carries a broadcast hint on its batch-bounded side (round
+    * 4: 110 jobs / ~16 s job time vs 216 / ~25 s with AQE). Interpreted
+    * vs codegen, A9Bench (local[32] on a 4-core host), 6 alternating
+    * pairs, median warm run: 20.1 → 11.6 s at sf0.01, 26.1 → 20.6 s at
+    * sf0.1. */
+  val BatchConfig: StreamingPipeline.Config = StreamingPipeline.Config(
+    threshold = Threshold, embedDim = EmbedDim, clock = Clock,
+    batchShufflePartitions = Some(4), batchAdaptive = false)
+
+  /** Run the full pipeline over `Batches` micro-batches, each one
+    * [[StreamingPipeline.step]] with state kept in memory as eager
+    * checkpoints; returns the final clusters table. The loop IS the
+    * micro-batch boundary (same role as `foreachBatch` in the streaming
+    * wrapper). The returned table is a checkpoint the caller
+    * frees (`SparkHygiene.freeCheckpoint`); nothing else stays pinned,
+    * also when a batch throws.
     */
   def run(spark: SparkSession, sfDir: String): DataFrame = {
     val arts = syntheticArticles(Tables.documents(spark, sfDir))
-    // size the shuffle to the micro-batch, not the session default: a
-    // batch is bounded (~500-1000 rows), so dozens of 32-way exchanges
-    // per step are pure scheduling overhead. At 100 TB the same knob
-    // scales UP with batch volume.
-    //
-    // AQE is OFF inside this loop (round-4 measurement: 110 jobs /
-    // ~16 s job time vs 216 / ~25 s with AQE, reproduced). Round 3
-    // measured the opposite — back then the stats-less checkpointed
-    // state made the static planner pick sort-merge joins. Every join
-    // in the loop now carries an explicit broadcast hint on its
-    // batch-bounded side, so static planning is already optimal and
-    // AQE's per-exchange stage materialization is pure scheduling
-    // overhead. The streaming wrapper makes the same choice by default
-    // (`StreamingPipeline.Config.batchAdaptive`). The loop also runs
-    // interpreted (see withBatchExecution), measured on this loop:
-    // A9Bench (local[32] on a 4-core host), 6 pairs with alternating
-    // order, median warm run 20.1 → 11.6 s at sf0.01 and 26.1 → 20.6 s
-    // at sf0.1 against the codegen loop (6/6 pairs each).
-    SparkHygiene.withBatchExecution(spark, shufflePartitions = Some(4),
-        adaptive = Some(false)) {
-      runBatches(spark, arts)
+    StreamingPipeline.withBatchExecution(spark, BatchConfig) {
+      var pool = StreamingPipeline.emptyPool(spark)
+      var table = ClusterTable.emptyTable(spark)
+      try {
+        for (b <- 0 until Batches) {
+          val step = StreamingPipeline.step(pool, table,
+            arts.filter(col("batch") === b).drop("grp", "batch"), BatchConfig)
+          try if (step.batchSize > 0) {
+            SparkHygiene.freeCheckpoint(pool)
+            pool = step.pool
+            val next = step.table.localCheckpoint(eager = true)
+            SparkHygiene.freeCheckpoint(table)
+            table = next
+          } finally step.release.close()
+        }
+        table
+      } catch { case e: Throwable => SparkHygiene.freeCheckpoint(table); throw e }
+      finally SparkHygiene.freeCheckpoint(pool)
     }
-  }
-
-  private def runBatches(spark: SparkSession, arts: DataFrame): DataFrame = {
-    var table = ClusterTable.emptyTable(spark)
-    var pool = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], Schemas.pool)
-    for (b <- 0 until Batches) {
-      val raw = arts.filter(col("batch") === b).drop("grp", "batch")
-      val prepped = Preprocess(raw, EmbedDim)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val step = Clustering.step(
-        pool, prepped.select(col("id"), col("concat_embedding")))
-      // step.pool is eagerly checkpointed — the previous pool state is
-      // superseded NOW, not whenever the ContextCleaner gets to it
-      SparkHygiene.freeCheckpoint(pool)
-      pool = step.pool
-      val ups = ClusterTable.upsertRows(table, step.assignments, prepped, Clock)
-      // eager checkpoint, deliberately NOT a lazy persist: the
-      // summarize pass references `merged` from several INDEPENDENT
-      // broadcast futures that launch concurrently at job start — with
-      // a lazy cache they race and each computes the merge anti-join
-      // before the cache settles (measured +35% on a9 warm); the
-      // checkpoint materializes it exactly once
-      val merged = ClusterTable.merge(table, ups).localCheckpoint(eager = true)
-      SparkHygiene.freeCheckpoint(table)
-      val updated = step.assignments.select(col("cluster_id").as("PK")).distinct()
-      table = ClusterTable.summarizePass(merged, updated, Threshold)
-        .localCheckpoint(eager = true)
-      SparkHygiene.freeCheckpoint(merged)
-      prepped.unpersist()
-    }
-    table
   }
 
   /** A9 flagship query over the pipeline's final table. */

@@ -208,120 +208,141 @@ object StreamingPipeline {
     }
   }
 
-  /** One micro-batch: preprocess → embed → cluster → upsert → trigger →
-    * summarize, reading state v(batchId-1) and writing v(batchId).
-    * Public so tests can drive replay semantics directly.
+  /** One micro-batch's result from [[step]]: the next `pool` (a
+    * checkpoint the caller frees) and `table` (lazy over the batch's
+    * checkpoints: write or checkpoint it before `release`), both the
+    * caller's own for an empty batch; the upsert rows `ups` (the change
+    * feed) and the `updated` PKs; and `release`, which frees the
+    * persisted preprocessed batch and the batch's checkpoints. */
+  final case class Step(pool: DataFrame, ups: DataFrame, table: DataFrame,
+                        updated: DataFrame, batchSize: Long, release: AutoCloseable)
+
+  /** The micro-batch dataflow (reference `process_records.py:556-608`)
+    * from the caller's `pool` and `table`: required-field filter →
+    * preprocess → embed → cluster → upsert → merge → trigger →
+    * summarize. [[processBatch]] and `NewsPipeline.run` both run it;
+    * where state lives and when it is freed is theirs. Run it under
+    * [[withBatchExecution]]. If it throws, it has freed what it built.
     *
     * Build-once contract: the batch's upsert rows are computed exactly
     * once, and so is the merged table whenever the inline summarize
     * pass runs. Each is read by more than one action (the merge's key
     * broadcast and union, the change-feed write; the summarize pass's
     * collect and the table write), and as a lazy plan each action would
-    * rescan v(batchId-1) and rerun every broadcast beneath it. Both are
-    * local checkpoints, not caches. The upsert rows' checkpoint is lazy:
-    * their first reader is the merge's key broadcast, which runs alone
-    * and fills every partition before anything else reads them, so an
-    * eager count would be one more job. The merged table's is eager:
-    * the summarize pass starts several broadcast futures over it at
-    * once, and an interleaved A/B measured lazy caching ~8% slower per
-    * inline batch (NewsPipeline measured the same on a9). The
-    * checkpoints, the clustering step's outputs and the persisted
-    * preprocessed batch are released when the batch ends, on every exit
-    * path, so a batch leaves no cache pinned.
-    *
-    * The batch runs interpreted, with the configured shuffle and AQE
-    * settings, under [[graft.SparkHygiene.withBatchExecution]].
+    * rescan the prior table and rerun every broadcast beneath it. Both
+    * are local checkpoints, not caches. The upsert rows' checkpoint is
+    * lazy: their first reader is the merge's key broadcast, which runs
+    * alone and fills every partition before anything else reads them,
+    * so an eager count would be one more job. The merged table's is
+    * eager: the summarize pass starts several broadcast futures over it
+    * at once, and with a lazy cache they race and each computes the
+    * merge before the cache settles (measured +35% on the a9 warm run,
+    * ~8% slower per inline feed batch in an interleaved A/B).
     */
-  def processBatch(batch: DataFrame, batchId: Long, stateDir: String,
-                   cfg: Config = Config()): Unit = {
-    // foreachBatch hands us the stream's own session clone, but tests
-    // drive processBatch on shared sessions: the helper leaves the
-    // session's conf as it found it either way
-    graft.SparkHygiene.withBatchExecution(batch.sparkSession,
-        cfg.batchShufflePartitions, Some(cfg.batchAdaptive)) {
-      processBatchInner(batch, batchId, stateDir, cfg)
-    }
-  }
-
-  private def processBatchInner(batch: DataFrame, batchId: Long,
-                                stateDir: String, cfg: Config): Unit = {
-    val spark = batch.sparkSession
-    val poolBase = s"$stateDir/pool"
-    val tableBase = s"$stateDir/table"
-    val pool = readVersion(spark, poolBase, batchId - 1, emptyPool(spark))
-    val table = readVersion(spark, tableBase, batchId - 1, ClusterTable.emptyTable(spark))
-
+  def step(pool: DataFrame, table: DataFrame, batch: DataFrame, cfg: Config): Step = {
     // P10: a JSON file source parses corrupt lines to all-null rows;
     // drop records missing the required-field contract
     // (README.md:204-221 — id/text/title/date) before processing
     val valid = batch.filter(
       col("id").isNotNull && col("text").isNotNull &&
         col("title").isNotNull && col("date").isNotNull)
-
     val prepped = Preprocess(valid, cfg.embedDim)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the batch's checkpoints, freed with `prepped` on every exit path
     val checkpoints = mutable.ArrayBuffer.empty[DataFrame]
+    val release: AutoCloseable = () => {
+      prepped.unpersist()
+      checkpoints.foreach(graft.SparkHygiene.freeCheckpoint)
+    }
     def checkpoint(df: DataFrame, eager: Boolean): DataFrame = {
       val c = df.localCheckpoint(eager)
       checkpoints += c
       c
     }
     try {
-      val step = Clustering.step(
+      val clustered = Clustering.step(
         pool, prepped.select(col("id"), col("concat_embedding")),
         Clustering.Config(eps = cfg.eps, strategy = cfg.strategy,
           singletonTtl = cfg.singletonTtl))
-      checkpoints += step.pool
-      if (step.batchSize == 0) {
-        // still publish the state version so restore finds a contiguous chain
-        pool.write.mode("overwrite").parquet(versionPath(poolBase, batchId))
-        table.write.mode("overwrite").parquet(versionPath(tableBase, batchId))
-      } else {
-        // A5 pool statistics as OBSERVED metrics (reference recalculated
-        // stats every batch, `process_records.py:313-319,427-434`):
-        // observe() piggybacks on the state write — zero extra jobs —
-        // and surfaces via QueryExecutionListener / the SQL metrics UI.
-        val observedPool = step.pool.observe("graft_pool_stats",
-          sum(when(col("is_cluster"), 1).otherwise(0)).as("n_clusters"),
-          sum(when(!col("is_cluster"), 1).otherwise(0)).as("n_singletons"),
-          sum(col("n_articles")).as("total_articles"))
-        // built once each (see processBatch)
+      checkpoints += clustered.pool
+      val updated = clustered.assignments.select(col("cluster_id").as("PK")).distinct()
+      if (clustered.batchSize == 0)
+        Step(pool, ClusterTable.emptyTable(pool.sparkSession), table, updated, 0L, release)
+      else {
+        // built once each (see above)
         val ups = checkpoint(
-          ClusterTable.upsertRows(table, step.assignments, prepped, cfg.clock), eager = false)
-        val merged =
-          if (cfg.inlineSummarize) checkpoint(ClusterTable.merge(table, ups), eager = true)
-          else ClusterTable.merge(table, ups)
-        val updated = step.assignments.select(col("cluster_id").as("PK")).distinct()
+          ClusterTable.upsertRows(table, clustered.assignments, prepped, cfg.clock), eager = false)
         val next =
-          if (cfg.inlineSummarize) ClusterTable.summarizePass(merged, updated, cfg.threshold)
-          else merged
-        observedPool.write.mode("overwrite").parquet(versionPath(poolBase, batchId))
-        next.write.mode("overwrite").parquet(versionPath(tableBase, batchId))
-        if (cfg.emitCdc)
-          ups.write.mode("overwrite").parquet(versionPath(s"$stateDir/cdc", batchId))
-        // Serving store: REBUILD the touched buckets wholesale from the
-        // versioned table (the source of truth) rather than merging the
-        // batch's upserts against the store's current content. A merge
-        // would not survive a crash mid-write: dynamic partition
-        // overwrite truncates whole buckets, and replaying only the
-        // batch's own upserts cannot reinstate OTHER clusters that
-        // shared a truncated bucket (ADVICE r2). Replaying a bucket
-        // rebuild is idempotent AND self-healing — it always rewrites
-        // the complete bucket contents from committed state.
-        cfg.servingStore.foreach { store =>
-          val truth = spark.read.schema(Schemas.clusters).parquet(versionPath(tableBase, batchId))
-          store.rebuildBucketsFor(
-            truth, truth.join(broadcast(updated), Seq("PK"), "left_semi"))
-        }
+          if (cfg.inlineSummarize) ClusterTable.summarizePass(
+            checkpoint(ClusterTable.merge(table, ups), eager = true), updated, cfg.threshold)
+          else ClusterTable.merge(table, ups)
+        // the next pool is the caller's from here on
+        checkpoints -= clustered.pool
+        Step(clustered.pool, ups, next, updated, clustered.batchSize, release)
       }
-      prune(spark, poolBase, batchId, cfg.retainVersions)
-      prune(spark, tableBase, batchId, cfg.retainVersions)
-    } finally {
-      prepped.unpersist()
-      checkpoints.foreach(graft.SparkHygiene.freeCheckpoint)
-    }
+    } catch { case e: Throwable => release.close(); throw e }
   }
+
+  /** [[graft.SparkHygiene.withBatchExecution]] with `cfg`'s settings:
+    * the one span [[step]] runs in, for every caller. */
+  def withBatchExecution[T](spark: SparkSession, cfg: Config)(body: => T): T =
+    graft.SparkHygiene.withBatchExecution(spark, cfg.batchShufflePartitions,
+      Some(cfg.batchAdaptive))(body)
+
+  /** One micro-batch: [[step]] from state v(batchId-1), written as
+    * v(batchId). Public so tests can drive replay semantics directly.
+    * The batch leaves no cache pinned, on every exit path.
+    */
+  def processBatch(batch: DataFrame, batchId: Long, stateDir: String,
+                   cfg: Config = Config()): Unit =
+    // foreachBatch hands us the stream's own session clone, but tests
+    // drive processBatch on shared sessions: the helper leaves the
+    // session's conf as it found it either way
+    withBatchExecution(batch.sparkSession, cfg) {
+      val spark = batch.sparkSession
+      val poolBase = s"$stateDir/pool"
+      val tableBase = s"$stateDir/table"
+      val s = step(readVersion(spark, poolBase, batchId - 1, emptyPool(spark)),
+        readVersion(spark, tableBase, batchId - 1, ClusterTable.emptyTable(spark)), batch, cfg)
+      try {
+        if (s.batchSize == 0) {
+          // still publish the state version so restore finds a contiguous chain
+          s.pool.write.mode("overwrite").parquet(versionPath(poolBase, batchId))
+          s.table.write.mode("overwrite").parquet(versionPath(tableBase, batchId))
+        } else {
+          // A5 pool statistics as OBSERVED metrics (reference recalculated
+          // stats every batch, `process_records.py:313-319,427-434`):
+          // observe() piggybacks on the state write — zero extra jobs —
+          // and surfaces via QueryExecutionListener / the SQL metrics UI.
+          s.pool.observe("graft_pool_stats",
+            sum(when(col("is_cluster"), 1).otherwise(0)).as("n_clusters"),
+            sum(when(!col("is_cluster"), 1).otherwise(0)).as("n_singletons"),
+            sum(col("n_articles")).as("total_articles"))
+            .write.mode("overwrite").parquet(versionPath(poolBase, batchId))
+          s.table.write.mode("overwrite").parquet(versionPath(tableBase, batchId))
+          if (cfg.emitCdc)
+            s.ups.write.mode("overwrite").parquet(versionPath(s"$stateDir/cdc", batchId))
+          // Serving store: REBUILD the touched buckets wholesale from the
+          // versioned table (the source of truth) rather than merging the
+          // batch's upserts against the store's current content. A merge
+          // would not survive a crash mid-write: dynamic partition
+          // overwrite truncates whole buckets, and replaying only the
+          // batch's own upserts cannot reinstate OTHER clusters that
+          // shared a truncated bucket (ADVICE r2). Replaying a bucket
+          // rebuild is idempotent AND self-healing — it always rewrites
+          // the complete bucket contents from committed state.
+          cfg.servingStore.foreach { store =>
+            val truth = spark.read.schema(Schemas.clusters).parquet(versionPath(tableBase, batchId))
+            store.rebuildBucketsFor(
+              truth, truth.join(broadcast(s.updated), Seq("PK"), "left_semi"))
+          }
+        }
+        prune(spark, poolBase, batchId, cfg.retainVersions)
+        prune(spark, tableBase, batchId, cfg.retainVersions)
+      } finally {
+        s.release.close()
+        graft.SparkHygiene.freeCheckpoint(s.pool)
+      }
+    }
 
   /** Latest committed clusters table (the read path / A9 input): the
     * newest committed base version, resolved as [[readVersion]] does,

@@ -61,21 +61,16 @@ object StreamWrapProbe {
         val schema = arts.drop("grp", "batch").schema
         val s2 = SparkHygiene.streamStateSession(spark, partitions)
         s2.conf.set("spark.sql.adaptive.enabled", aqe.toString)
+        val cfg = NewsPipeline.BatchConfig.copy(inlineSummarize = !decoupled,
+          emitCdc = decoupled, batchShufflePartitions = Some(partitions), batchAdaptive = aqe)
         val t0 = System.nanoTime()
         streaming.StreamingPipeline.start(
           s2.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1").json(inDir),
-          s"$tmp/state", s"$tmp/ck",
-          streaming.StreamingPipeline.Config(
-            threshold = NewsPipeline.Threshold,
-            embedDim = NewsPipeline.EmbedDim,
-            clock = NewsPipeline.Clock,
-            inlineSummarize = !decoupled,
-            emitCdc = decoupled))
+          s"$tmp/state", s"$tmp/ck", cfg)
           .awaitTermination()
         if (decoupled)
-          streaming.CdcConsumer.stream(s2, s"$tmp/state", s"$tmp/ck2",
-            threshold = NewsPipeline.Threshold)
+          streaming.CdcConsumer.stream(s2, s"$tmp/state", s"$tmp/ck2", cfg.threshold)
             .awaitTermination()
         (System.nanoTime() - t0) / 1e9
       } finally {

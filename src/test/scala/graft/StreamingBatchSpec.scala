@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 import scala.util.Random
@@ -9,6 +10,7 @@ import scala.util.Random
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
 import graft.operators.ClusterStore
 import graft.streaming.{CdcConsumer, StreamingPipeline}
@@ -184,16 +186,94 @@ class StreamingBatchSpec extends SparkSpec {
   private val BatchKeys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled",
     "spark.sql.codegen.factoryMode")
 
+  /** The a9 pipeline's input, 80 documents (16 per batch); returns the
+    * directory `NewsPipeline.run` reads. */
+  private def a9Docs(session: SparkSession = spark): String = {
+    val docs = Files.createTempDirectory("graft-batch-docs").toString
+    session.createDataFrame((0L until 80L).map(i => (i, s"document $i text")))
+      .toDF("doc_id", "text").write.parquet(s"$docs/documents.parquet")
+    docs
+  }
+
+  /** Id of the RDD a `localCheckpoint`'d frame keeps persisted. */
+  private def checkpointId(df: DataFrame): Int = df.queryExecution.analyzed match {
+    case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    case other => fail(s"not a checkpoint: ${other.getClass.getSimpleName}")
+  }
+
+  /** Order-free digest of a table's rows, every column included: row
+    * count and two hash sums. */
+  private def digest(df: DataFrame): (Long, BigDecimal, BigDecimal) = {
+    val cols = df.columns.map(col)
+    val r = df.select(xxhash64(cols: _*).cast("decimal(38,0)").as("h"),
+        hash(cols: _*).cast("decimal(38,0)").as("g"))
+      .agg(count(lit(1)), sum("h"), sum("g")).head()
+    (r.getLong(0), BigDecimal(r.getDecimal(1)), BigDecimal(r.getDecimal(2)))
+  }
+
+  // Jobs of NewsPipeline.run on the 80 documents when it had a batch
+  // body of its own, counted by this spec. The shared core checkpoints
+  // the upsert rows, which the merge's broadcast and union each rebuilt.
+  private val SeedA9Jobs = 84
+  private val A9Jobs = 74
+
+  test("NewsPipeline.run: pinned job count, and only the returned table stays pinned") {
+    val docs = a9Docs()
+    val before = persistedIds
+    var table: DataFrame = null
+    val jobs = jobsOf { table = NewsPipeline.run(spark, docs) }
+    info(s"NewsPipeline.run jobs: $jobs (was $SeedA9Jobs)")
+    try {
+      assert(jobs == A9Jobs)
+      assert(persistedIds -- before == Set(checkpointId(table)))
+    } finally SparkHygiene.freeCheckpoint(table)
+  }
+
+  test("NewsPipeline.run that throws part-way through leaves nothing pinned") {
+    val docs = a9Docs()
+    // the documents vanish half-way through the run, so a later batch's
+    // read of them fails
+    val started = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (started.incrementAndGet() == A9Jobs / 2)
+          Files.list(Paths.get(docs, "documents.parquet")).iterator.asScala.foreach(Files.delete)
+    }
+    val before = persistedIds
+    spark.sparkContext.addSparkListener(listener)
+    try intercept[Exception](NewsPipeline.run(spark, docs))
+    finally {
+      drainListenerBus()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(started.get() > A9Jobs / 2 && started.get() < A9Jobs,
+      s"the run should fail part-way, after ${started.get()} of $A9Jobs jobs")
+    assert(persistedIds -- before == Set.empty[Int], "NewsPipeline.run left RDDs pinned")
+  }
+
+  test("the a9 corpus gives the same table through NewsPipeline.run and processBatch") {
+    val docs = a9Docs()
+    val batched = NewsPipeline.run(spark, docs)
+    val state = Files.createTempDirectory("graft-batch-a9").toString
+    val arts = NewsPipeline.syntheticArticles(Tables.documents(spark, docs))
+    for (b <- 0 until NewsPipeline.Batches)
+      StreamingPipeline.processBatch(arts.filter($"batch" === b).drop("grp", "batch"),
+        b.toLong, state, NewsPipeline.BatchConfig)
+    try {
+      assert(digest(StreamingPipeline.latestTable(spark, state)) == digest(batched))
+      // non-vacuous: each planted group is one cluster, summarized
+      assert(batched.filter($"row_type" === "metadata" && $"generated_summary" =!= "" &&
+        $"summary_count" > 0).count() == NewsPipeline.Groups)
+    } finally SparkHygiene.freeCheckpoint(batched)
+  }
+
   /** Runs a decoupled feed batch, a consumer pass over its feed and the
     * a9 batch pipeline on a fresh session whose batch keys are `preset`
     * (None: unset), and asserts each call leaves `getAll` as it was. */
   private def leavesConfAsFound(preset: Map[String, Option[String]]): Unit = {
     val s = spark.newSession()
     GraftExtensions.register(s)
-    // the a9 pipeline's input: 16 documents per batch
-    val docs = Files.createTempDirectory("graft-batch-docs").toString
-    s.createDataFrame((0L until 80L).map(i => (i, s"document $i text"))).toDF("doc_id", "text")
-      .write.parquet(s"$docs/documents.parquet")
+    val docs = a9Docs(s)
     preset.foreach { case (k, v) => v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
     val conf = s.conf.getAll
     preset.foreach { case (k, v) => assert(conf.get(k) == v, k) }
