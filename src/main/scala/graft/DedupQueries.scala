@@ -67,8 +67,9 @@ object DedupQueries {
 
   private def dupComponents(s: SparkSession, dir: String): DataFrame = {
     val corpus = corpusWithNearDups(s, dir)
-    val pairs = graft.operators.JaccardJoin
+    val (verified, _) = graft.operators.JaccardJoin
       .selfPairs(corpus, "doc_id", "text", t = 0.5)
+    val pairs = verified
       .withColumn("jaccard",
         round(col("common") * lit(1.0) / (col("sza") + col("szb") - col("common")), 6))
       .filter(col("jaccard") >= 0.5)
@@ -96,17 +97,19 @@ object DedupQueries {
     // join rows). Verification is an O(n+m) merge-scan intersect over
     // the full sorted shingle arrays — no re-explode, no per-pair
     // aggregation. Lossless: same result set as the naive index join.
-    "d2_jaccard_pairs" -> ((s, dir) =>
+    "d2_jaccard_pairs" -> ((s, dir) => {
       // PPJoin prefix-index candidates + merge-scan verify — the
       // JaccardJoin operator; BroadcastDocs verify is the single-node
       // choice, ShuffleDocs the cluster-scale one (JaccardJoinSpec pins
       // both to identical results)
-      graft.operators.JaccardJoin
+      val (verified, _) = graft.operators.JaccardJoin
         .selfPairs(corpusWithNearDups(s, dir), "doc_id", "text", t = 0.5)
+      verified
         .withColumn("jaccard",
           round(col("common") * lit(1.0) / (col("sza") + col("szb") - col("common")), 6))
         .filter(col("jaccard") >= 0.5)
-        .select(col("a"), col("b"), col("jaccard")).orderBy(col("a"), col("b"))),
+        .select(col("a"), col("b"), col("jaccard")).orderBy(col("a"), col("b"))
+    }),
 
     // MinHash + LSH banding: 12 hashes (portable: string-min of seeded
     // md5), 4 bands × 3 rows; candidate pairs = any shared band bucket.
@@ -114,11 +117,12 @@ object DedupQueries {
     // (MinHashShingles — shingling fused in, no explode, no 12-way
     // min-aggregation shuffle); candidates from an equi-join on
     // (band, hash) — never all-pairs.
-    "d3_minhash_pairs" -> ((s, dir) =>
-      graft.operators.MinHashJoin
+    "d3_minhash_pairs" -> ((s, dir) => {
+      val (pairs, _) = graft.operators.MinHashJoin
         .selfPairs(corpusWithNearDups(s, dir), "doc_id", "text",
           shingleLen = 3, hashes = 12, bands = 4)
-        .orderBy(col("a"), col("b"))),
+      pairs.orderBy(col("a"), col("b"))
+    }),
 
     // d3's candidates scored with the MinHash Jaccard ESTIMATE instead
     // of exact verification — the at-scale scoring path: agreement over
@@ -126,11 +130,12 @@ object DedupQueries {
     // re-intersection. est = agree/hashes is an exact small-int ratio,
     // so the rounded value is engine-portable; the DuckDB oracle replays
     // signatures, banding, candidates, and the estimate.
-    "d16_jaccard_estimate" -> ((s, dir) =>
-      graft.operators.MinHashJoin
+    "d16_jaccard_estimate" -> ((s, dir) => {
+      val (scored, _) = graft.operators.MinHashJoin
         .selfPairsEstimated(corpusWithNearDups(s, dir), "doc_id", "text",
           shingleLen = 3, hashes = 12, bands = 4)
-        .orderBy(col("a"), col("b"))),
+      scored.orderBy(col("a"), col("b"))
+    }),
 
     // SimHash near-dup: 32-bit signature (bit-majority over md5 nibbles
     // of every token), pairs at Hamming ≤ 6. Signatures are one
@@ -616,7 +621,7 @@ object DedupQueries {
         // plan: 23 exchanges, 1 reused — AQE reuse dedupes only
         // identical canonical subtrees, and the x/y sides diverge under
         // pushdown). Materialize once; the harness sweeps the cache
-        // (dropAllPersisted), same contract as PageRank.run
+        // (dropAllPersisted) after the query
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       vecs.count() // eager: concurrent broadcast futures race a lazy cache
       vecs.as("x").join(vecs.as("y"),

@@ -95,7 +95,14 @@ object NewsPipeline {
     }
   }
 
-  /** A9 flagship query over the pipeline's final table. */
-  def uiClusters(spark: SparkSession, sfDir: String): DataFrame =
-    ClusterTable.uiClusterList(run(spark, sfDir))
+  /** A9 flagship query over the pipeline's final table. The list is at
+    * most a few rows, so it is collected and the table freed here; the
+    * rows come back as a local relation in [[ClusterTable.uiClusterList]]'s
+    * schema and order, and nothing stays pinned. */
+  def uiClusters(spark: SparkSession, sfDir: String): DataFrame = {
+    val table = run(spark, sfDir)
+    val list = ClusterTable.uiClusterList(table)
+    val rows = try list.collect() finally SparkHygiene.freeCheckpoint(table)
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), list.schema)
+  }
 }

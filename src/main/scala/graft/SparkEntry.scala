@@ -685,9 +685,9 @@ object QueryCatalog {
       // 2-exchange per-order pair fan-out (see coPurchasePairs)
       val edges = coPurchasePairs(s, dir, strict = false)
         .select(col("l_partkey").as("src"), col("pk2").as("dst")).distinct()
-      graft.operators.PageRank.run(edges, "src", "dst",
-          iters = 3, scale = 1000000000000L)
-        .select(col("node").as("part_key"), col("rank").as("pr_rank"))
+      val (ranks, _) = graft.operators.PageRank.run(edges, "src", "dst",
+        iters = 3, scale = 1000000000000L)
+      ranks.select(col("node").as("part_key"), col("rank").as("pr_rank"))
         .orderBy(col("part_key"))
     }),
 
@@ -708,8 +708,8 @@ object QueryCatalog {
         .select(col("p").as("src"), (col("sk") + lit(1000000000L)).as("dst"))
         .unionByName(ps.select((col("sk") + lit(1000000000L)).as("src"),
           col("p").as("dst")))
-      graft.operators.LabelProp.run(edges, "src", "dst", iters = 3)
-        .orderBy(col("node"))
+      val (labels, _) = graft.operators.LabelProp.run(edges, "src", "dst", iters = 3)
+      labels.orderBy(col("node"))
     }),
 
     // Fixed-round k-core peeling (operators/KCore) over the weighted
@@ -739,7 +739,7 @@ object QueryCatalog {
       val k = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .agg(floor(percentile(col("deg"), lit(0.3))).cast("long"))
         .first().getLong(0)
-      val (core, _) = graft.operators.KCore.peelWithRelease(
+      val (core, _) = graft.operators.KCore.peel(
         edges, "src", "dst", k.toInt, rounds = 3)
       // the peel materialized every round eagerly (round caches pinned;
       // the LAST one backs the returned frame and is swept by the
@@ -772,9 +772,9 @@ object QueryCatalog {
       val seeds = Tables.supplier(s, dir)
         .filter(col("s_suppkey") % 10 === 1)
         .select((col("s_suppkey") + lit(1000000000L)).as("node"))
-      graft.operators.ShortestPaths.run(edges, "src", "dst", "w",
-          seeds, "node", rounds = 4)
-        .orderBy(col("node"))
+      val (dist, _) = graft.operators.ShortestPaths.run(edges, "src", "dst", "w",
+        seeds, "node", rounds = 4)
+      dist.orderBy(col("node"))
     }),
 
     // HITS hubs-and-authorities (operators/Hits) over the directed
@@ -789,8 +789,8 @@ object QueryCatalog {
       val edges = Tables.lineitem(s, dir)
         .select(col("l_partkey").as("src"),
           (col("l_suppkey") + lit(1000000000L)).as("dst"))
-      graft.operators.Hits.run(edges, "src", "dst", rounds = 2)
-        .orderBy(col("node"))
+      val (scores, _) = graft.operators.Hits.run(edges, "src", "dst", rounds = 2)
+      scores.orderBy(col("node"))
     }),
 
     // Join-size PRE-FLIGHT (operators/JoinSizeEstimate): estimate

@@ -9,17 +9,20 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Partition-pruned persistence for the clusters table — the 100 TB
-  * shape of the upsert sink (SURVEY S9; VERDICT r1: "ClusterTable.merge
-  * is a full-table read-modify-write per micro-batch").
+/** Partition-pruned persistence for the clusters table — the serving
+  * store the streaming pipeline (or its change-feed consumer) writes
+  * after each micro-batch (SURVEY S9).
   *
   * Layout: parquet partitioned by `bucket = pmod(xxhash64(PK), nBuckets)`.
-  * A micro-batch touches a handful of clusters, so `merge`:
-  *   1. computes the touched buckets from the upsert rows (small);
-  *   2. reads ONLY those bucket directories;
+  * The one write path is [[rebuildBucketsFor]]: a micro-batch touches a
+  * handful of clusters, so it
+  *   1. computes the touched buckets from the touched rows (small);
+  *   2. takes ONLY those buckets' rows from the authoritative table;
   *   3. rewrites ONLY those partitions (dynamic partition overwrite).
-  * Cost per batch is O(touched buckets), independent of table size —
-  * the DynamoDB-batch-write equivalent, not a universe rewrite.
+  * Cost per batch is O(touched buckets), independent of table size, and
+  * because every rewritten bucket comes whole from the authoritative
+  * table, never from the store, replaying a batch after a crash
+  * mid-write restores complete buckets.
   *
   * Point lookups (S11/S12 `PK = x`, the reference's query by partition
   * key) are ONE Spark job, the caller's own action: [[cluster]] computes
@@ -103,50 +106,13 @@ final class ClusterStore(spark: SparkSession, path: String, nBuckets: Int = 64) 
       scan(Seq(d)).filter(lit(false)).drop("bucket"))
   }
 
-  /** Upsert with last-writer-wins on (PK,SK), rewriting only the buckets
-    * the upsert touches.
-    *
-    * NOT crash-atomic: the dynamic partition overwrite deletes then
-    * replaces whole buckets, so a crash mid-write can lose rows of
-    * other clusters co-located in a touched bucket, and replaying the
-    * same upserts merges against the truncated store and cannot restore
-    * them. Callers that own an authoritative copy of the table (the
-    * streaming pipeline's versioned state) should recover/write via
-    * [[rebuildBucketsFor]], which rewrites complete buckets from truth
-    * and is therefore self-healing under replay.
-    */
-  def merge(upserts: DataFrame): Unit = {
-    val up = upserts.withColumn("bucket", bucketOf(col("PK")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // the touched buckets that already have a directory: only those
-      // are read, and an upsert that only adds buckets just appends them
-      val current =
-        if (!exists) Nil
-        else up.select("bucket").distinct().as[Long].collect().toSeq
-          .map(bucketDir).filter(fs.exists)
-      if (current.isEmpty) {
-        up.write.partitionBy("bucket").mode("append").parquet(path)
-        return
-      }
-      val merged = scan(current)
-        .join(up.select(col("PK"), col("SK")), Seq("PK", "SK"), "left_anti")
-        .unionByName(up)
-        // truncate lineage: parquet forbids overwriting a path that is
-        // still referenced by the write's own input plan
-        .localCheckpoint(true)
-      try overwriteBuckets(merged)
-      finally graft.SparkHygiene.freeCheckpoint(merged)
-    } finally up.unpersist()
-  }
-
   /** Rewrite, from an authoritative table, every bucket that `touched`
     * rows land in. `truth` must contain ALL rows of the table (or at
     * least of the touched buckets); only the touched buckets are read
     * from it and rewritten — cost stays O(touched buckets), independent
-    * of table size. Unlike [[merge]] this never reads the store itself,
-    * so a replay after a crash mid-write restores complete bucket
-    * contents (including co-bucketed clusters a truncated write lost).
+    * of table size. It never reads the store itself, so a replay after
+    * a crash mid-write restores complete bucket contents (including
+    * co-bucketed clusters a truncated write lost).
     */
   def rebuildBucketsFor(truth: DataFrame, touched: DataFrame): Unit = {
     val touchedBuckets = touched.select(bucketOf(col("PK")).as("bucket"))

@@ -11,9 +11,10 @@ import graft.schemas.Schemas
   * (`SK = ARTICLE#<article_id>`), upserted per micro-batch with
   * last-writer-wins (PK,SK) dedup (`process_records.py:266-273`).
   *
-  * v0 persistence is read-modify-write parquet via [[ClusterStore]]; at
-  * 100 TB the same `merge` becomes a partition-pruned rewrite (bucketBy
-  * PK) or a Delta-style MERGE — the dataflow below is unchanged.
+  * The serving copy is [[ClusterStore]], a bucketed parquet store whose
+  * touched buckets are rewritten from this table after each micro-batch
+  * ([[ClusterStore.rebuildBucketsFor]]); the dataflow below does not
+  * depend on it.
   */
 object ClusterTable {
 

@@ -38,14 +38,17 @@ import org.apache.spark.sql.functions._
 object Hits {
 
   /** @return (node, hub, auth) after `rounds` full (auth, hub) updates,
-    *         plus a release handle for the pinned edge/node caches and
-    *         the final round's checkpoint blocks. The run is EAGER
-    *         (each round materializes); call the handle once the
-    *         result has been consumed.
+    *         and a handle whose `close()` unpersists the pinned edge and
+    *         node caches. The run is EAGER (each round materializes);
+    *         close once the result has been consumed. The final round's
+    *         two checkpoints are not freed by the handle: they BACK the
+    *         result (a local checkpoint has no lineage to recompute
+    *         from), so the result still computes after `close()`. They
+    *         are two bounded score frames, left to
+    *         `SparkHygiene.dropAllPersisted` or the ContextCleaner.
     */
-  def runWithRelease(edges: DataFrame, srcCol: String, dstCol: String,
-                     rounds: Int, scale: Long = 1000000000L)
-      : (DataFrame, () => Unit) = {
+  def run(edges: DataFrame, srcCol: String, dstCol: String,
+          rounds: Int, scale: Long = 1000000000L): (DataFrame, AutoCloseable) = {
     require(rounds >= 1, s"need rounds >= 1, got $rounds")
     val e = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
@@ -99,16 +102,7 @@ object Hits {
     }
     val out = hub.join(auth, Seq("node"))
       .select(col("node"), col("hub"), col("auth"))
-    // the release handle frees only the LINEAGE caches (edges, nodes):
-    // the final round's checkpoint blocks BACK the returned frame — a
-    // local checkpoint has no lineage to recompute from, so freeing
-    // them here would break the "actions after release still compute"
-    // contract the sibling operators keep. They are two bounded score
-    // frames, swept by the harness-level dropAllPersisted.
-    (out, () => { e.unpersist(); nodes.unpersist(); () })
+    // only the lineage caches go: the final checkpoints back `out`
+    (out, () => { e.unpersist(); nodes.unpersist() })
   }
-
-  def run(edges: DataFrame, srcCol: String, dstCol: String, rounds: Int,
-          scale: Long = 1000000000L): DataFrame =
-    runWithRelease(edges, srcCol, dstCol, rounds, scale)._1
 }

@@ -69,25 +69,15 @@ object JaccardJoin {
     * persist is eager (count) because the verify sides broadcast: their
     * exchange futures launch concurrently at job start and would race a
     * lazy cache into duplicate materialization (the NewsPipeline merge
-    * checkpoint documents the same race, +35% there). The cache is left
-    * registered for a harness-level sweep — the contract PageRank.run
-    * et al. carry; callers needing deterministic release use
-    * [[selfPairsWithRelease]].
+    * checkpoint documents the same race, +35% there).
+    *
+    * Returns the pairs and a handle whose `close()` unpersists the
+    * per-doc index; close after materializing the pairs (later actions
+    * still compute correctly but re-derive the index per consumer).
     */
   def selfPairs(corpus: DataFrame, idCol: String, textCol: String, t: Double,
                 shingleLen: Int = 3,
-                verify: VerifyStrategy = Auto()): DataFrame =
-    selfPairsWithRelease(corpus, idCol, textCol, t, shingleLen, verify)._1
-
-  /** As [[selfPairs]], plus an explicit release handle that unpersists
-    * the materialized per-doc index. Call it once the returned frame has
-    * been materialized; later actions still compute correctly but
-    * re-derive the index pipeline per consumer.
-    */
-  def selfPairsWithRelease(corpus: DataFrame, idCol: String, textCol: String,
-                           t: Double, shingleLen: Int = 3,
-                           verify: VerifyStrategy = Auto())
-      : (DataFrame, () => Unit) = {
+                verify: VerifyStrategy = Auto()): (DataFrame, AutoCloseable) = {
     require(t > 0 && t <= 1, s"threshold out of (0,1]: $t")
     val resolved = verify match {
       case Auto(threshold) =>
@@ -157,7 +147,7 @@ object JaccardJoin {
       .withColumn("common", VectorFns.sortedIntersectCount(col("sha"), col("shb")))
       .select(col("a"), col("b"), col("common"),
         col("sza").as("sza"), col("szb").as("szb"))
-    (out, () => { base.unpersist(); () })
+    (out, () => base.unpersist())
   }
 
   /** ASYMMETRIC verified near-dup pairs `(a ∈ probe, b ∈ ref)` — the

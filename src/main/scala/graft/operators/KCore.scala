@@ -34,23 +34,13 @@ object KCore {
 
   /** @return (node, deg) of nodes surviving `rounds` peels at
     * threshold `k`, with their degree over the edges alive at the
-    * final check. Leaves the last round's edge cache registered for a
-    * harness-level sweep (same contract as [[PageRank.run]]); library
-    * callers that need deterministic release should use
-    * [[peelWithRelease]].
+    * final check, and a handle whose `close()` unpersists the last
+    * round's pinned edge set. The result still reads that edge set, so
+    * close after materializing it; later actions still compute
+    * correctly but re-derive the rounds.
     */
   def peel(edges: DataFrame, srcCol: String, dstCol: String,
-           k: Int, rounds: Int): DataFrame =
-    peelWithRelease(edges, srcCol, dstCol, k, rounds)._1
-
-  /** As [[peel]], plus an explicit release handle for the surviving
-    * pinned round cache (the final `keep` frame still reads the last
-    * pinned edge set, so release only after materializing the result) —
-    * the runWithRelease contract the sibling iterative operators
-    * (PageRank/LabelProp/ShortestPaths/Hits) expose (ADVICE r11).
-    */
-  def peelWithRelease(edges: DataFrame, srcCol: String, dstCol: String,
-                      k: Int, rounds: Int): (DataFrame, () => Unit) = {
+           k: Int, rounds: Int): (DataFrame, AutoCloseable) = {
     require(k >= 1, s"need k >= 1, got $k")
     require(rounds >= 1, s"need rounds >= 1, got $rounds")
     var active = edges.select(col(srcCol).cast("long").as("src"),
@@ -72,6 +62,6 @@ object KCore {
       }
     }
     val out = keep.select(col("src").as("node"), col("deg"))
-    (out, () => { pinned.foreach(_.unpersist()); () })
+    (out, () => pinned.foreach(_.unpersist()))
   }
 }

@@ -44,13 +44,13 @@ import org.apache.spark.sql.functions._
 object LabelProp {
 
   /** @param edges DataFrame with long columns `srcCol`, `dstCol`
-    * @return (node, label) after `iters` synchronous min rounds plus
-    *         a release handle for the pinned edge cache (the bench
-    *         harness sweeps caches between queries; library callers
-    *         release after materializing)
+    * @return (node, label) after `iters` synchronous min rounds, and a
+    *         handle whose `close()` unpersists the pinned edge cache;
+    *         close after materializing the result (later actions still
+    *         compute correctly but re-derive the edge list)
     */
-  def runWithRelease(edges: DataFrame, srcCol: String, dstCol: String,
-                     iters: Int): (DataFrame, () => Unit) = {
+  def run(edges: DataFrame, srcCol: String, dstCol: String,
+          iters: Int): (DataFrame, AutoCloseable) = {
     require(iters >= 1, s"need iters >= 1, got $iters")
     val raw = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
@@ -73,10 +73,6 @@ object LabelProp {
         .agg(min(col("label")).as("label"))
         .withColumnRenamed("dst", "node")
     }
-    (labels, () => { e.unpersist(); () })
+    (labels, () => e.unpersist())
   }
-
-  def run(edges: DataFrame, srcCol: String, dstCol: String,
-          iters: Int): DataFrame =
-    runWithRelease(edges, srcCol, dstCol, iters)._1
 }

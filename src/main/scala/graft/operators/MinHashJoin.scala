@@ -24,17 +24,13 @@ import graft.functions.TextFns
   */
 object MinHashJoin {
 
-  def selfPairs(corpus: DataFrame, idCol: String, textCol: String,
-                shingleLen: Int = 3, hashes: Int = 12, bands: Int = 4): DataFrame =
-    selfPairsWithRelease(corpus, idCol, textCol, shingleLen, hashes, bands)._1
-
-  /** As [[selfPairs]], plus a release handle for the pinned signature
-    * cache (harnesses may instead sweep with
-    * SparkHygiene.dropAllPersisted — the PageRank.run contract).
+  /** Candidate pairs, and a handle whose `close()` unpersists the
+    * pinned signature frame; close after materializing the pairs (later
+    * actions still compute correctly but recompute the signatures).
     */
-  def selfPairsWithRelease(corpus: DataFrame, idCol: String, textCol: String,
-                           shingleLen: Int = 3, hashes: Int = 12,
-                           bands: Int = 4): (DataFrame, () => Unit) = {
+  def selfPairs(corpus: DataFrame, idCol: String, textCol: String,
+                shingleLen: Int = 3, hashes: Int = 12,
+                bands: Int = 4): (DataFrame, AutoCloseable) = {
     require(bands > 0 && hashes % bands == 0,
       s"hashes ($hashes) must split evenly into bands ($bands)")
     // optimization r14: the signature pass (md5 MinHash over every
@@ -46,8 +42,7 @@ object MinHashJoin {
     // only (PERF lesson #10 — the 1.8× array-payload trap — is about
     // riding the array THROUGH the join, not about this cache).
     val sigs = signatures(corpus, idCol, textCol, shingleLen, hashes)
-    val out = bandJoin(sigs, hashes, bands)
-    (out, () => { sigs.unpersist(); () })
+    (bandJoin(sigs, hashes, bands), () => sigs.unpersist())
   }
 
   /** The persisted, eagerly materialized signature frame
@@ -109,22 +104,13 @@ object MinHashJoin {
     * #10's 1.8× array-payload trap stays avoided). The agreement
     * count is an exact integer and `hashes` a constant, so the rounded
     * ratio is engine-portable (single exactly-rounded division).
+    *
+    * Returns the scored pairs and a handle whose `close()` unpersists
+    * the pinned signature frame, as [[selfPairs]] does.
     */
   def selfPairsEstimated(corpus: DataFrame, idCol: String, textCol: String,
                          shingleLen: Int = 3, hashes: Int = 12,
-                         bands: Int = 4): DataFrame =
-    selfPairsEstimatedWithRelease(corpus, idCol, textCol, shingleLen,
-      hashes, bands)._1
-
-  /** As [[selfPairsEstimated]], plus the release handle for the pinned
-    * signature cache (ADVICE r14: the estimated path had no release
-    * variant at all — library callers outside a dropAllPersisted-swept
-    * harness accumulated a pinned signature frame per call).
-    */
-  def selfPairsEstimatedWithRelease(corpus: DataFrame, idCol: String,
-                                    textCol: String, shingleLen: Int = 3,
-                                    hashes: Int = 12, bands: Int = 4)
-      : (DataFrame, () => Unit) = {
+                         bands: Int = 4): (DataFrame, AutoCloseable) = {
     require(bands > 0 && hashes % bands == 0,
       s"hashes ($hashes) must split evenly into bands ($bands)")
     val sigs = signatures(corpus, idCol, textCol, shingleLen, hashes)
@@ -137,6 +123,6 @@ object MinHashJoin {
       .join(sigs.select(col("__id").as("b"), col("mhs").as("__mb")), "b")
       .select(col("a"), col("b"),
         round(agree.cast("double") / lit(hashes.toDouble), 4).as("est_jaccard"))
-    (out, () => { sigs.unpersist(); () })
+    (out, () => sigs.unpersist())
   }
 }

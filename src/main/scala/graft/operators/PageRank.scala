@@ -51,29 +51,17 @@ import org.apache.spark.sql.functions._
 object PageRank {
 
   /** @param edges DataFrame with long columns `srcCol`, `dstCol`
-    * @return (node, pr_rank) after `iters` exact integer iterations
-    *
-    * Cache lifetime: the run pins two iteration-invariant frames (the
-    * degree-annotated edge list and the node set) and BOTH remain
-    * referenced by the returned plan — the node set feeds the
-    * zero-contribution union in EVERY iteration, so unpersisting it
-    * here would recompute its distinct per iteration at execution time.
-    * Library callers should use [[runWithRelease]] and invoke the
-    * release handle after materializing the result; `run` leaves the
-    * caches registered for a harness-level sweep (the bench harness
-    * calls dropAllPersisted between queries).
+    * @return (node, pr_rank) after `iters` exact integer iterations, and
+    *         a handle whose `close()` unpersists the two caches the run
+    *         pins: the degree-annotated edge list and the node set. Both
+    *         stay referenced by the returned plan (the node set feeds
+    *         the zero-contribution union in EVERY iteration, so freeing
+    *         it early would recompute its distinct per iteration), so
+    *         close after materializing the result; later actions still
+    *         compute correctly but re-derive both subtrees.
     */
   def run(edges: DataFrame, srcCol: String, dstCol: String,
-          iters: Int, scale: Long): DataFrame =
-    runWithRelease(edges, srcCol, dstCol, iters, scale)._1
-
-  /** As [[run]], plus an explicit release handle that unpersists the
-    * two pinned caches. Call it once the returned frame has been
-    * materialized (or is no longer needed); actions issued after
-    * release still compute correctly but re-derive both subtrees.
-    */
-  def runWithRelease(edges: DataFrame, srcCol: String, dstCol: String,
-                     iters: Int, scale: Long): (DataFrame, () => Unit) = {
+          iters: Int, scale: Long): (DataFrame, AutoCloseable) = {
     require(iters >= 1, s"need iters >= 1, got $iters")
     val e = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
@@ -111,11 +99,9 @@ object PageRank {
         .agg((lit(base) + sum(col("contrib"))).as("rank"))
         .withColumnRenamed("dst", "node")
     }
-    // both caches stay registered until the caller invokes the release
-    // handle (or a harness-level dropAllPersisted runs) — each is still
-    // referenced by the returned plan's lineage: edgeDeg by every
-    // iteration's join, nodes by every iteration's zero-contribution
-    // union
-    (ranks, () => { edgeDeg.unpersist(); nodes.unpersist(); () })
+    // both caches stay registered until the caller closes the handle:
+    // edgeDeg backs every iteration's join, nodes every iteration's
+    // zero-contribution union
+    (ranks, () => { edgeDeg.unpersist(); nodes.unpersist() })
   }
 }

@@ -42,12 +42,14 @@ object ShortestPaths {
     *                and `weightCol` (non-negative long)
     * @param sources DataFrame whose `sourceCol` lists seed nodes
     *                (distance 0); duplicates are deduped
-    * @return ((node, dist) for every node reachable within `rounds`
-    *         edges, release handle for the pinned edge cache)
+    * @return (node, dist) for every node reachable within `rounds`
+    *         edges, and a handle whose `close()` unpersists the pinned
+    *         edge cache; close after materializing the result (later
+    *         actions still compute correctly but re-derive the edge list)
     */
-  def runWithRelease(edges: DataFrame, srcCol: String, dstCol: String,
-                     weightCol: String, sources: DataFrame,
-                     sourceCol: String, rounds: Int): (DataFrame, () => Unit) = {
+  def run(edges: DataFrame, srcCol: String, dstCol: String,
+          weightCol: String, sources: DataFrame, sourceCol: String,
+          rounds: Int): (DataFrame, AutoCloseable) = {
     require(rounds >= 1, s"need rounds >= 1, got $rounds")
     val raw = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"),
@@ -73,12 +75,6 @@ object ShortestPaths {
         .agg(min(col("dist") + col("w")).as("dist"))
         .withColumnRenamed("dst", "node")
     }
-    (dist, () => { e.unpersist(); () })
+    (dist, () => e.unpersist())
   }
-
-  def run(edges: DataFrame, srcCol: String, dstCol: String,
-          weightCol: String, sources: DataFrame, sourceCol: String,
-          rounds: Int): DataFrame =
-    runWithRelease(edges, srcCol, dstCol, weightCol, sources, sourceCol,
-      rounds)._1
 }

@@ -91,21 +91,11 @@ object Winnowing {
     * Plan shape: the fingerprint pass (one per-doc exchange), a
     * distinct + df aggregate on `fp`, then ONE fp equi-join whose key
     * cardinality is bounded by `maxDf` — corpus-linear candidates, no
-    * cartesian, partitionable at 100 TB.
+    * cartesian, partitionable at 100 TB. Nothing is persisted.
     */
   def containmentPairs(corpus: DataFrame, idCol: String, textCol: String,
                        k: Int = 8, w: Int = 4, tau: Double = 0.5,
-                       maxDf: Long = 1000L): DataFrame =
-    containmentPairsWithRelease(corpus, idCol, textCol, k, w, tau, maxDf)._1
-
-  /** As [[containmentPairs]], plus a release handle (kept for API
-    * compatibility with the sibling WithRelease operators; a NO-OP since
-    * the r15 prove-or-drop removed the kept-fingerprint persist).
-    */
-  def containmentPairsWithRelease(corpus: DataFrame, idCol: String,
-                                  textCol: String, k: Int = 8, w: Int = 4,
-                                  tau: Double = 0.5, maxDf: Long = 1000L)
-      : (DataFrame, () => Unit) = {
+                       maxDf: Long = 1000L): DataFrame = {
     val fps = fingerprints(corpus, idCol, textCol, k, w)
       .select(col(idCol).as("__id"), col("fp")).distinct()
     // `kept` feeds three consumers (both shared-join sides and the
@@ -115,11 +105,10 @@ object Winnowing {
     // per-character explode and both window sorts are gone, so the
     // recompute is one cheap fused pass whose exchanges dedup), and the
     // persist measured NEUTRAL at sf0.1 (4.09 → 4.37 s) and a LOSS at
-    // 10× the corpus (D15ScaleProbe interleaved draws: persist
+    // 10× the corpus (interleaved draws, OPTIMIZATION_r15.md: persist
     // [11.5, 9.0] vs recompute [10.0, 9.0] s) — prove-or-drop resolved
     // to DROP (optimization r15, guide §1.1/§5: a persist that never
-    // pays for itself is pure memory pressure at 100 TB). The release
-    // handle stays a no-op for API compatibility.
+    // pays for itself is pure memory pressure at 100 TB).
     val kept = fps
       .withColumn("__df", count(lit(1)).over(Window.partitionBy(col("fp"))))
       .filter(col("__df") <= maxDf)
@@ -129,7 +118,7 @@ object Winnowing {
       .join(kept.select(col("__id").as("b"), col("fp")), "fp")
       .filter(col("a") < col("b"))
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("shared"))
-    val out = shared
+    shared
       .join(sizes.select(col("__id").as("a"), col("__n").as("fpa")), "a")
       .join(sizes.select(col("__id").as("b"), col("__n").as("fpb")), "b")
       .withColumn("containment",
@@ -137,6 +126,5 @@ object Winnowing {
       .filter(col("containment") >= tau)
       .select(col("a"), col("b"), col("shared"), col("fpa"), col("fpb"),
         col("containment"))
-    (out, () => ())
   }
 }

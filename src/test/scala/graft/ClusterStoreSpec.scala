@@ -13,37 +13,6 @@ class ClusterStoreSpec extends SparkSpec {
   private def rows(pairs: (String, String, String)*) =
     pairs.toDF("PK", "SK", "description")
 
-  test("merge is last-writer-wins and preserves untouched rows") {
-    val path = Files.createTempDirectory("graft-store").toString + "/t"
-    val store = new ClusterStore(spark, path, nBuckets = 16)
-    store.merge(rows(("c1", "M", "v1"), ("c2", "M", "v1"), ("c3", "M", "v1")))
-    store.merge(rows(("c2", "M", "v2")))
-    val got = store.read().select("PK", "description")
-      .as[(String, String)].collect().toMap
-    assert(got == Map("c1" -> "v1", "c2" -> "v2", "c3" -> "v1"))
-  }
-
-  test("merge rewrites only touched bucket partitions (scale invariant)") {
-    val path = Files.createTempDirectory("graft-store2").toString + "/t"
-    val store = new ClusterStore(spark, path, nBuckets = 16)
-    // seed many clusters spread over buckets
-    store.merge(rows((0 until 50).map(i => (s"c$i", "M", "seed")): _*))
-    val before = store.filesByBucket()
-
-    // touch exactly one cluster
-    store.merge(rows(("c7", "M", "updated")))
-    val after = store.filesByBucket()
-
-    val touchedBucket = spark.range(1)
-      .select(pmod(xxhash64(lit("c7")), lit(16L))).as[Long].head()
-    assert(after(touchedBucket) != before(touchedBucket))
-    // every other bucket's files are byte-identical (same part files)
-    (before.keySet - touchedBucket).foreach { b =>
-      assert(after(b) == before(b), s"bucket $b was rewritten")
-    }
-    assert(store.read().filter(col("PK") === "c7").head().getString(2) == "updated")
-  }
-
   test("rebuildBucketsFor repairs a bucket truncated by a crashed write") {
     val path = Files.createTempDirectory("graft-store4").toString + "/t"
     val nBuckets = 4 // few buckets => co-located clusters guaranteed
@@ -61,8 +30,7 @@ class ClusterStoreSpec extends SparkSpec {
     assert(store.read().count() < 20)
 
     // replaying the batch that touched c7 rebuilds the WHOLE bucket from
-    // truth — co-bucketed clusters come back too (a merge of just c7's
-    // upsert row could not restore them)
+    // truth — co-bucketed clusters come back too
     store.rebuildBucketsFor(truth, truth.filter(col("PK") === "c7"))
     val got = store.read().select("PK", "description")
       .as[(String, String)].collect().toMap
@@ -89,7 +57,7 @@ class ClusterStoreSpec extends SparkSpec {
     assert(store.read().filter(col("PK") === "c7").head().getString(2) == "updated")
   }
 
-  test("merge and rebuildBucketsFor leave the session's partitionOverwriteMode as they found it") {
+  test("rebuildBucketsFor leaves the session's partitionOverwriteMode unchanged") {
     val key = "spark.sql.sources.partitionOverwriteMode"
     // getOption answers the default for an unset key; getAll holds only
     // the keys the session set
@@ -104,13 +72,14 @@ class ClusterStoreSpec extends SparkSpec {
         val store = new ClusterStore(spark, path, nBuckets = 16)
         val truth = rows((0 until 20).map(i => (s"c$i", "M", "seed")): _*)
         store.rebuildBucketsFor(truth, truth)
-        store.merge(rows(("c7", "M", "merged")))
-        assert(conf == seen, s"after merge, preset $preset")
-        val truth2 = truth.withColumn("description",
-          when(col("PK") === "c3", "rebuilt").when(col("PK") === "c7", "merged")
-            .otherwise(col("description")))
+        val truth1 = truth.withColumn("description",
+          when(col("PK") === "c7", "updated").otherwise(col("description")))
+        store.rebuildBucketsFor(truth1, truth1.filter(col("PK") === "c7"))
+        assert(conf == seen, s"after the first overwrite, preset $preset")
+        val truth2 = truth1.withColumn("description",
+          when(col("PK") === "c3", "rebuilt").otherwise(col("description")))
         store.rebuildBucketsFor(truth2, truth2.filter(col("PK") === "c3"))
-        assert(conf == seen, s"after rebuildBucketsFor, preset $preset")
+        assert(conf == seen, s"after the second overwrite, preset $preset")
         // both overwrites stayed dynamic under a static session: the
         // buckets neither write touched kept their rows
         val got = store.read().select("PK", "description").as[(String, String)].collect().toMap
@@ -122,7 +91,8 @@ class ClusterStoreSpec extends SparkSpec {
   test("bucket-pruned point read returns one cluster's rows") {
     val path = Files.createTempDirectory("graft-store3").toString + "/t"
     val store = new ClusterStore(spark, path, nBuckets = 8)
-    store.merge(rows(("c1", "M", "m"), ("c1", "A#1", "a"), ("c2", "M", "x")))
+    val truth = rows(("c1", "M", "m"), ("c1", "A#1", "a"), ("c2", "M", "x"))
+    store.rebuildBucketsFor(truth, truth)
     val got = store.cluster("c1").select("SK").as[String].collect().toSet
     assert(got == Set("M", "A#1"))
   }

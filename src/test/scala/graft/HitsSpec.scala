@@ -4,7 +4,8 @@ import graft.operators.Hits
 
 /** Fixed-round exact-integer HITS: bit-identical agreement with a
   * sequential reference under any partitioning, mutual-reinforcement
-  * sanity on a planted bipartite graph, and release-handle hygiene.
+  * sanity on a planted bipartite graph, and a plan that does not grow
+  * with rounds (the release handle: [[OperatorReleaseSpec]]).
   */
 class HitsSpec extends SparkSpec {
   import spark.implicits._
@@ -42,7 +43,7 @@ class HitsSpec extends SparkSpec {
     for (rounds <- Seq(1, 2); parts <- Seq(1, 5)) {
       val exp = reference(g, rounds)
       val got = Hits.run(g.toDF("src", "dst").repartition(parts),
-        "src", "dst", rounds)
+        "src", "dst", rounds)._1
         .as[(Long, Long, Long)].collect()
         .map(r => r._1 -> ((r._2, r._3))).toMap
       assert(got == exp, s"rounds=$rounds parts=$parts")
@@ -51,7 +52,7 @@ class HitsSpec extends SparkSpec {
 
   test("mutual reinforcement: the doubly-cited authority dominates, and " +
     "the broad hub dominates") {
-    val got = Hits.run(g.toDF("src", "dst"), "src", "dst", 2)
+    val got = Hits.run(g.toDF("src", "dst"), "src", "dst", 2)._1
       .as[(Long, Long, Long)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
     assert(got(11L)._2 > got(10L)._2 && got(10L)._2 == got(12L)._2,
@@ -65,7 +66,7 @@ class HitsSpec extends SparkSpec {
     "localCheckpoint keeps the final plan flat from rounds=2 to rounds=6, " +
     "and rounds=6 still matches the sequential reference") {
     def planNodes(rounds: Int): (Int, Map[Long, (Long, Long)]) = {
-      val df = Hits.run(g.toDF("src", "dst"), "src", "dst", rounds)
+      val df = Hits.run(g.toDF("src", "dst"), "src", "dst", rounds)._1
       val n = df.queryExecution.executedPlan.collect { case p => p }.size
       (n, df.as[(Long, Long, Long)].collect()
         .map(r => r._1 -> ((r._2, r._3))).toMap)
@@ -79,14 +80,4 @@ class HitsSpec extends SparkSpec {
     assert(got6 == reference(g, 6), "rounds=6 must still match the reference")
   }
 
-  test("runWithRelease unpins the edge cache; results survive release") {
-    spark.sharedState.cacheManager.clearCache()
-    val (scores, release) = Hits.runWithRelease(
-      g.toDF("src", "dst"), "src", "dst", 1)
-    val before = scores.as[(Long, Long, Long)].collect().toSet
-    assert(!spark.sharedState.cacheManager.isEmpty)
-    release()
-    assert(spark.sharedState.cacheManager.isEmpty)
-    assert(scores.as[(Long, Long, Long)].collect().toSet == before)
-  }
 }

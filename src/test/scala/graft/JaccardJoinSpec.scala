@@ -47,7 +47,7 @@ class JaccardJoinSpec extends SparkSpec {
     for (seed <- Seq(5, 23)) {
       val corpus = randomCorpus(seed, 40)
       val t = 0.5
-      val got = JaccardJoin.selfPairs(corpus.toDF("doc_id", "text"), "doc_id", "text", t)
+      val got = JaccardJoin.selfPairs(corpus.toDF("doc_id", "text"), "doc_id", "text", t)._1
         .withColumn("j", col("common") * lit(1.0) / (col("sza") + col("szb") - col("common")))
         .filter(col("j") >= t)
         .select("a", "b").as[(Long, Long)].collect().toSet
@@ -60,7 +60,7 @@ class JaccardJoinSpec extends SparkSpec {
   test("BroadcastDocs and ShuffleDocs verify strategies return identical rows") {
     val corpus = randomCorpus(99, 40).toDF("doc_id", "text")
     def rows(v: JaccardJoin.VerifyStrategy) =
-      JaccardJoin.selfPairs(corpus, "doc_id", "text", t = 0.5, verify = v)
+      JaccardJoin.selfPairs(corpus, "doc_id", "text", t = 0.5, verify = v)._1
         .as[(Long, Long, Long, Long, Long)].collect().toSet
     val b = rows(JaccardJoin.BroadcastDocs)
     val s = rows(JaccardJoin.ShuffleDocs)
@@ -71,37 +71,13 @@ class JaccardJoinSpec extends SparkSpec {
   test("Auto resolves by corpus size; both resolutions match the explicit strategies") {
     val corpus = randomCorpus(7, 40).toDF("doc_id", "text")
     def rows(v: JaccardJoin.VerifyStrategy) =
-      JaccardJoin.selfPairs(corpus, "doc_id", "text", t = 0.5, verify = v)
+      JaccardJoin.selfPairs(corpus, "doc_id", "text", t = 0.5, verify = v)._1
         .as[(Long, Long, Long, Long, Long)].collect().toSet
     val viaBroadcast = rows(JaccardJoin.Auto(threshold = 1000000L)) // n <= gate
     val viaShuffle = rows(JaccardJoin.Auto(threshold = 1L))         // n > gate
     assert(viaBroadcast == viaShuffle)
     assert(viaBroadcast == rows(JaccardJoin.BroadcastDocs))
     assert(viaBroadcast.nonEmpty)
-  }
-
-  test("selfPairsWithRelease materializes the index once and releases it on demand") {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val corpus = randomCorpus(11, 60).toDF("doc_id", "text")
-    val (out, release) =
-      JaccardJoin.selfPairsWithRelease(corpus, "doc_id", "text", t = 0.5)
-    val rows = out.collect()
-    assert(rows.nonEmpty)
-    // the per-doc index is pinned while consumers read it (optimization
-    // r14: exchange reuse only deduped the shuffle write — every
-    // consumer re-ran the final collect_list merge + sorts, measured
-    // ~2.8× the persisted form at sf0.1)…
-    val during = spark.sparkContext.getPersistentRDDs.keySet
-    assert((during -- before).nonEmpty,
-      "expected the per-doc index to be materialized (persisted)")
-    // …and the release handle returns the session to its prior state
-    // (harnesses may instead sweep with SparkHygiene.dropAllPersisted)
-    release()
-    val after = spark.sparkContext.getPersistentRDDs.keySet
-    assert((after -- before).isEmpty,
-      s"release() left persistent RDDs behind: ${after -- before}")
-    // released frames still compute correctly (re-derived per consumer)
-    assert(out.collect().toSet == rows.toSet)
   }
 
   test("crossPairs is lossless for probe×ref and emits NO same-side pairs") {

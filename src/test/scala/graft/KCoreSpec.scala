@@ -34,29 +34,28 @@ class KCoreSpec extends SparkSpec {
   test("matches the sequential reference at every round count, any partitioning") {
     for (rounds <- Seq(1, 2, 3); parts <- Seq(1, 5)) {
       val exp = reference(g, k = 2, rounds)
-      val got = KCore.peel(g.toDF("src", "dst").repartition(parts),
-        "src", "dst", k = 2, rounds = rounds).as[(Long, Long)].collect().toMap
+      val (core, handle) = KCore.peel(g.toDF("src", "dst").repartition(parts),
+        "src", "dst", k = 2, rounds = rounds)
+      val got = try core.as[(Long, Long)].collect().toMap finally handle.close()
       assert(got == exp, s"rounds=$rounds parts=$parts")
-      SparkHygiene.dropAllPersisted(spark)
     }
   }
 
   test("pendant chain peels one link per round; the clique is the fixpoint") {
-    def nodes(rounds: Int): Set[Long] =
-      KCore.peel(g.toDF("src", "dst"), "src", "dst", k = 2, rounds = rounds)
-        .as[(Long, Long)].collect().map(_._1).toSet
+    def nodes(rounds: Int): Set[Long] = {
+      val (core, handle) = KCore.peel(g.toDF("src", "dst"), "src", "dst", k = 2, rounds = rounds)
+      try core.as[(Long, Long)].collect().map(_._1).toSet finally handle.close()
+    }
     assert(nodes(1) == Set(1L, 2L, 3L, 4L, 5L), "round 1 sheds only the tail")
     assert(nodes(2) == Set(1L, 2L, 3L, 4L), "round 2 sheds the exposed link")
     assert(nodes(3) == Set(1L, 2L, 3L, 4L), "the 4-clique is 2-core-stable")
-    SparkHygiene.dropAllPersisted(spark)
   }
 
   test("degrees reported are over the surviving edge set, not the input") {
     // after round 2 node 4 has lost its pendant edge: degree 3, not 4
-    val got = KCore.peel(g.toDF("src", "dst"), "src", "dst", k = 2, rounds = 3)
-      .as[(Long, Long)].collect().toMap
+    val (core, handle) = KCore.peel(g.toDF("src", "dst"), "src", "dst", k = 2, rounds = 3)
+    val got = try core.as[(Long, Long)].collect().toMap finally handle.close()
     assert(got(4L) == 3L)
     assert(got(1L) == 3L)
-    SparkHygiene.dropAllPersisted(spark)
   }
 }

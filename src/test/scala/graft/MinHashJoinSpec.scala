@@ -12,7 +12,7 @@ class MinHashJoinSpec extends SparkSpec {
     .toDF("doc_id", "text")
 
   test("banded candidates surface planted near-dups, not dissimilar docs") {
-    val pairs = MinHashJoin.selfPairs(corpus, "doc_id", "text")
+    val pairs = MinHashJoin.selfPairs(corpus, "doc_id", "text")._1
       .as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 2L)))
     assert(!pairs.contains((1L, 3L)) && !pairs.contains((2L, 3L)))
@@ -21,7 +21,7 @@ class MinHashJoinSpec extends SparkSpec {
   test("identical docs collide in every band (pair emitted exactly once)") {
     val dup = Seq((1L, "same words here"), (2L, "same words here"))
       .toDF("doc_id", "text")
-    val rows = MinHashJoin.selfPairs(dup, "doc_id", "text")
+    val rows = MinHashJoin.selfPairs(dup, "doc_id", "text")._1
       .as[(Long, Long)].collect()
     // the first-agreeing-band predicate collapses the 4 band hits
     // map-side — no distinct() exchange exists in the plan (PlanSpec)
@@ -30,7 +30,7 @@ class MinHashJoinSpec extends SparkSpec {
 
   test("hashes must split evenly into bands") {
     intercept[IllegalArgumentException] {
-      MinHashJoin.selfPairs(corpus, "doc_id", "text", hashes = 12, bands = 5)
+      MinHashJoin.selfPairs(corpus, "doc_id", "text", hashes = 12, bands = 5)._1
     }
   }
 
@@ -41,7 +41,7 @@ class MinHashJoinSpec extends SparkSpec {
       (2L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
       (3L, "alpha beta gamma delta epsilon zeta eta theta iota kappa extra"))
       .toDF("doc_id", "text")
-    val est = MinHashJoin.selfPairsEstimated(docs, "doc_id", "text")
+    val est = MinHashJoin.selfPairsEstimated(docs, "doc_id", "text")._1
       .as[(Long, Long, Double)].collect().map(r => (r._1, r._2) -> r._3).toMap
     assert(est((1L, 2L)) == 1.0, "identical docs must estimate exactly 1.0")
     // the near-dup pair surfaced and its estimate is a valid k/12 ratio

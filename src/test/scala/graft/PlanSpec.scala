@@ -85,7 +85,8 @@ class PlanSpec extends SparkSpec {
     val path = Files.createTempDirectory("graft-planstore").toString + "/t"
     val store = new ClusterStore(spark, path, nBuckets = 8)
     import spark.implicits._
-    store.merge(Seq(("c1", "M", "x"), ("c2", "M", "y")).toDF("PK", "SK", "d"))
+    val truth = Seq(("c1", "M", "x"), ("c2", "M", "y")).toDF("PK", "SK", "d")
+    store.rebuildBucketsFor(truth, truth)
     val p = store.cluster("c1").queryExecution.executedPlan.toString
     assert(p.contains("PartitionFilters: [") && !p.contains("PartitionFilters: []"),
       s"bucket partition filter missing:\n$p")

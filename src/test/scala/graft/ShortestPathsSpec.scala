@@ -4,8 +4,9 @@ import graft.operators.ShortestPaths
 
 /** Bounded-round multi-source shortest paths: bit-identical agreement
   * with a sequential min-plus reference (weighted + multi-source),
-  * k-edge horizon semantics, unreached-node absence, release-handle
-  * hygiene, and the one-exchange-per-round plan.
+  * k-edge horizon semantics, unreached-node absence and the
+  * one-exchange-per-round plan (the release handle:
+  * [[OperatorReleaseSpec]]).
   */
 class ShortestPathsSpec extends SparkSpec {
   import spark.implicits._
@@ -38,7 +39,7 @@ class ShortestPathsSpec extends SparkSpec {
       val exp = reference(g, sources, iters)
       val got = ShortestPaths.run(
         g.toDF("src", "dst", "w").repartition(parts), "src", "dst", "w",
-        sources.toDF("node"), "node", iters)
+        sources.toDF("node"), "node", iters)._1
         .as[(Long, Long)].collect().toMap
       assert(got == exp, s"iters=$iters parts=$parts")
     }
@@ -46,7 +47,7 @@ class ShortestPathsSpec extends SparkSpec {
 
   test("a longer-but-cheaper path wins once the round horizon admits it") {
     def d(iters: Int) = ShortestPaths.run(g.toDF("src", "dst", "w"),
-      "src", "dst", "w", Seq(1L).toDF("node"), "node", iters)
+      "src", "dst", "w", Seq(1L).toDF("node"), "node", iters)._1
       .as[(Long, Long)].collect().toMap
     assert(d(1)(3L) == 10L, "1 round: only the direct edge is in horizon")
     assert(d(2)(3L) == 5L, "2 rounds: the 2-edge path 1->2->3 wins")
@@ -54,32 +55,18 @@ class ShortestPathsSpec extends SparkSpec {
 
   test("unreachable nodes are absent; island components never appear") {
     val got = ShortestPaths.run(g.toDF("src", "dst", "w"), "src", "dst",
-      "w", sources.toDF("node"), "node", 5)
+      "w", sources.toDF("node"), "node", 5)._1
       .as[(Long, Long)].collect().toMap
     assert(!got.contains(30L) && !got.contains(31L))
     assert(got == Map(1L -> 0L, 2L -> 2L, 3L -> 5L,
       20L -> 0L, 21L -> 1L, 22L -> 8L))
   }
 
-  test("runWithRelease unpins the edge cache; results survive release") {
-    spark.sharedState.cacheManager.clearCache()
-    val (dist, release) = ShortestPaths.runWithRelease(
-      g.toDF("src", "dst", "w"), "src", "dst", "w",
-      sources.toDF("node"), "node", 2)
-    val before = dist.as[(Long, Long)].collect().toMap
-    assert(!spark.sharedState.cacheManager.isEmpty,
-      "edge cache must be pinned during the run")
-    release()
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "release() must unpersist the edge cache")
-    assert(dist.as[(Long, Long)].collect().toMap == before)
-  }
-
   test("plan: exactly one shuffle per round plus constant setup") {
     val edges = g.toDF("src", "dst", "w")
     def shuffles(iters: Int): Int = {
       val root = ShortestPaths.run(edges, "src", "dst", "w",
-        sources.toDF("node"), "node", iters)
+        sources.toDF("node"), "node", iters)._1
         .queryExecution.executedPlan
       val plan = root match {
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>

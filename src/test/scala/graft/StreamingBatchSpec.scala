@@ -12,7 +12,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.ClusterStore
+import graft.operators.{ClusterStore, ClusterTable}
 import graft.streaming.{CdcConsumer, StreamingPipeline}
 
 /** The micro-batch's execution contract: how many Spark jobs one
@@ -249,6 +249,21 @@ class StreamingBatchSpec extends SparkSpec {
     assert(started.get() > A9Jobs / 2 && started.get() < A9Jobs,
       s"the run should fail part-way, after ${started.get()} of $A9Jobs jobs")
     assert(persistedIds -- before == Set.empty[Int], "NewsPipeline.run left RDDs pinned")
+  }
+
+  test("NewsPipeline.uiClusters pins nothing and gives uiClusterList's rows, schema and order") {
+    val docs = a9Docs()
+    val before = persistedIds
+    val ui = NewsPipeline.uiClusters(spark, docs)
+    val got = ui.collect().toSeq
+    assert(persistedIds -- before == Set.empty[Int], "uiClusters left RDDs pinned")
+    val table = NewsPipeline.run(spark, docs)
+    try {
+      val want = ClusterTable.uiClusterList(table)
+      assert(ui.schema == want.schema)
+      assert(got == want.collect().toSeq)
+      assert(got.nonEmpty)
+    } finally SparkHygiene.freeCheckpoint(table)
   }
 
   test("the a9 corpus gives the same table through NewsPipeline.run and processBatch") {
