@@ -55,11 +55,11 @@ object NewsPipeline {
 
   /** The a9 pipeline's micro-batch settings. The shuffle is sized to
     * the bounded batch, not the session, and AQE is off: every join in
-    * the batch carries a broadcast hint on its batch-bounded side (round
-    * 4: 110 jobs / ~16 s job time vs 216 / ~25 s with AQE). Interpreted
-    * vs codegen, A9Bench (local[32] on a 4-core host), 6 alternating
-    * pairs, median warm run: 20.1 → 11.6 s at sf0.01, 26.1 → 20.6 s at
-    * sf0.1. */
+    * the batch has a batch-bounded side, broadcast or on the driver
+    * (round 4: 110 jobs / ~16 s job time vs 216 / ~25 s with AQE).
+    * Interpreted vs codegen, A9Bench (local[32] on a 4-core host), 6
+    * alternating pairs, median warm run: 20.1 → 11.6 s at sf0.01,
+    * 26.1 → 20.6 s at sf0.1. */
   val BatchConfig: StreamingPipeline.Config = StreamingPipeline.Config(
     threshold = Threshold, embedDim = EmbedDim, clock = Clock,
     batchShufflePartitions = Some(4), batchAdaptive = false)
@@ -81,13 +81,13 @@ object NewsPipeline {
         for (b <- 0 until Batches) {
           val step = StreamingPipeline.step(pool, table,
             arts.filter(col("batch") === b).drop("grp", "batch"), BatchConfig)
-          try if (step.batchSize > 0) {
+          if (step.batchSize > 0) {
             SparkHygiene.freeCheckpoint(pool)
             pool = step.pool
             val next = step.table.localCheckpoint(eager = true)
             SparkHygiene.freeCheckpoint(table)
             table = next
-          } finally step.release.close()
+          }
         }
         table
       } catch { case e: Throwable => SparkHygiene.freeCheckpoint(table); throw e }

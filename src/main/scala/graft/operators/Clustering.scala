@@ -107,7 +107,8 @@ object Clustering {
     *                    batch_new) — cluster-level values post-merge;
     *                    batch_new = #new articles that joined that cluster
     *                    this batch (the A4 counter input). A local
-    *                    relation in one partition: nothing to free.
+    *                    relation: nothing to free, collected without a
+    *                    job.
     * @param batchSize   number of new articles in the batch
     */
   case class StepResult(pool: DataFrame, assignments: DataFrame, batchSize: Long)
@@ -147,7 +148,9 @@ object Clustering {
     * three bounded collects instead of as a distributed dataflow whose
     * planning cost exceeds its work at that size:
     *   1. the batch's (id, embedding) rows; new entries get seq
-    *      max(seq) + rank, ranked by `id` in Spark's string order;
+    *      max(seq) + rank, ranked by `id` in Spark's string order (no
+    *      job when the batch is a local relation, as a micro-batch's
+    *      is);
     *   2. the ε-edges new × (pool ∪ new), through the configured join,
     *      each partition's edges reduced to a spanning forest of
     *      (node, root) pairs by local union-find — bounded by touched
@@ -155,11 +158,11 @@ object Clustering {
     *      pool's max(seq). Until that is known the new entries are keyed
     *      -1 … -n;
     *   3. the touched pool rows, by `seq IN (…)`.
-    * The merged rows and the assignments come back as local relations
-    * coalesced to one partition: the assignments' single partition lets
-    * `ClusterTable.upsertRows` dedup without an exchange, and keeps the
-    * state versions to the files a single-partition batch writes. The
-    * pool is the untouched pool plus the merged rows, checkpointed.
+    * The merged rows come back as a local relation coalesced to one
+    * partition, so a pool version gains one file per batch; the pool
+    * is the untouched pool plus the merged rows, checkpointed. The
+    * assignments are a plain local relation, which
+    * `ClusterTable.upsertRows` collects on the driver without a job.
     *
     * @param pool  current state (Schemas.pool); empty DataFrame on boot
     * @param batch new articles: (id: string, concat_embedding: array<float>),
@@ -243,7 +246,7 @@ object Clustering {
       Row(e.ids.head, m.clusterId, m.isCluster, m.n.toInt, components(root).count(_.seq > maxSeq))
     }
     StepResult(nextPool.localCheckpoint(eager = true),
-      spark.createDataFrame(assignments.asJava, AssignmentSchema).coalesce(1),
+      spark.createDataFrame(assignments.asJava, AssignmentSchema),
       fresh.length.toLong)
   }
 

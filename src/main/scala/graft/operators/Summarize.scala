@@ -117,7 +117,7 @@ object Summarize {
     */
   def dateRange(articles: DataFrame): DataFrame =
     articles
-      .withColumn("ts", to_timestamp(regexp_replace(col("publication_date"), "Z$", "")))
+      .withColumn("ts", try_to_timestamp(regexp_replace(col("publication_date"), "Z$", "")))
       .groupBy(col("PK"))
       .agg(
         date_format(min(col("ts")), "yyyy-MM-dd HH:mm:ss").as("earliest_date"),
@@ -140,7 +140,7 @@ object Summarize {
         array().cast("array<struct<k:string,v:string>>"))
     val kv = articles
       .select(col("PK"),
-        to_timestamp(regexp_replace(col("publication_date"), "Z$", "")).as("ts"),
+        try_to_timestamp(regexp_replace(col("publication_date"), "Z$", "")).as("ts"),
         explode_outer(concat(tagged("locations"), tagged("organizations"))).as("e"))
       .select(col("PK"), col("ts"), col("e.k").as("k"), col("e.v").as("v"))
     val counts = kv

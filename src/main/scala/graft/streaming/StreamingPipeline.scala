@@ -1,6 +1,6 @@
 package graft.streaming
 
-import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -78,13 +78,14 @@ object StreamingPipeline {
       /** AQE for the per-batch dataflow, set for the span of the batch
         * by [[graft.SparkHygiene.withBatchExecution]]. Default OFF, measured
         * (optimization r15, the NewsPipeline r4 lesson reproduced on
-        * the wrapper: every join in the batch dataflow carries an
-        * explicit broadcast hint on its batch-bounded side, so static
-        * planning is already optimal and AQE's per-exchange stage
-        * materialization is pure scheduling overhead — the interleaved
-        * probe measured 925 → 217 jobs and ~60 → ~35 s per drain with
-        * identical results). Turn on for deployments with skewed,
-        * stats-less batch inputs. */
+        * the wrapper: the batch's joins all have a batch-bounded side —
+        * the ε-join and the merge broadcast it by hint, and the upsert
+        * and the trigger run on the driver over local relations — so
+        * static planning is already optimal and AQE's per-exchange
+        * stage materialization is pure scheduling overhead; the
+        * interleaved probe measured 925 → 217 jobs and ~60 → ~35 s per
+        * drain with identical results). Turn on for deployments with
+        * skewed, stats-less batch inputs. */
       batchAdaptive: Boolean = false) {
     require(retainVersions >= 1,
       s"retainVersions must be >= 1 (0 would prune the version a batch just wrote), got $retainVersions")
@@ -209,77 +210,60 @@ object StreamingPipeline {
   }
 
   /** One micro-batch's result from [[step]]: the next `pool` (a
-    * checkpoint the caller frees) and `table` (lazy over the batch's
-    * checkpoints: write or checkpoint it before `release`), both the
-    * caller's own for an empty batch; the upsert rows `ups` (the change
-    * feed) and the `updated` PKs; and `release`, which frees the
-    * persisted preprocessed batch and the batch's checkpoints. */
+    * checkpoint the caller frees; the caller's own for an empty batch),
+    * the next `table` (lazy over the caller's table and local
+    * relations: write or checkpoint it before freeing the caller's),
+    * the upsert rows `ups` (the change feed, before the summarize pass)
+    * and the `updated` PKs. */
   final case class Step(pool: DataFrame, ups: DataFrame, table: DataFrame,
-                        updated: DataFrame, batchSize: Long, release: AutoCloseable)
+                        updated: DataFrame, batchSize: Long)
 
   /** The micro-batch dataflow (reference `process_records.py:556-608`)
     * from the caller's `pool` and `table`: required-field filter →
-    * preprocess → embed → cluster → upsert → merge → trigger →
-    * summarize. [[processBatch]] and `NewsPipeline.run` both run it;
-    * where state lives and when it is freed is theirs. Run it under
+    * preprocess → embed → cluster → upsert → trigger → summarize →
+    * merge. [[processBatch]] and `NewsPipeline.run` both run it; where
+    * state lives and when it is freed is theirs. Run it under
     * [[withBatchExecution]]. If it throws, it has freed what it built.
     *
-    * Build-once contract: the batch's upsert rows are computed exactly
-    * once, and so is the merged table whenever the inline summarize
-    * pass runs. Each is read by more than one action (the merge's key
-    * broadcast and union, the change-feed write; the summarize pass's
-    * collect and the table write), and as a lazy plan each action would
-    * rescan the prior table and rerun every broadcast beneath it. Both
-    * are local checkpoints, not caches. The upsert rows' checkpoint is
-    * lazy: their first reader is the merge's key broadcast, which runs
-    * alone and fills every partition before anything else reads them,
-    * so an eager count would be one more job. The merged table's is
-    * eager: the summarize pass starts several broadcast futures over it
-    * at once, and with a lazy cache they race and each computes the
-    * merge before the cache settles (measured +35% on the a9 warm run,
-    * ~8% slower per inline feed batch in an interleaved A/B).
+    * Build-once contract: the preprocessed batch is collected once, in
+    * one job, and handed onward as a local relation, and the pool is
+    * the one checkpoint the batch builds (`Clustering.step`). Everything
+    * after clustering is bounded by the batch and runs on the driver:
+    * `ClusterTable.upsertRows` reads the touched clusters' metadata
+    * rows in one filtered job, and the inline summarize pass reads the
+    * fired clusters' article rows in another, summarizes them in a
+    * third and rewrites the upsert rows in place
+    * (`ClusterTable.summarizeLocal`). The upsert rows are a local
+    * relation every reader shares, and the next table is
+    * `merge(table, summarized upsert rows)`, computed once by whoever
+    * writes it. An empty batch returns the caller's state without
+    * clustering.
     */
   def step(pool: DataFrame, table: DataFrame, batch: DataFrame, cfg: Config): Step = {
+    val spark = table.sparkSession
     // P10: a JSON file source parses corrupt lines to all-null rows;
     // drop records missing the required-field contract
     // (README.md:204-221 — id/text/title/date) before processing
     val valid = batch.filter(
       col("id").isNotNull && col("text").isNotNull &&
         col("title").isNotNull && col("date").isNotNull)
-    val prepped = Preprocess(valid, cfg.embedDim)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val checkpoints = mutable.ArrayBuffer.empty[DataFrame]
-    val release: AutoCloseable = () => {
-      prepped.unpersist()
-      checkpoints.foreach(graft.SparkHygiene.freeCheckpoint)
+    val preppedPlan = Preprocess(valid, cfg.embedDim)
+    val preppedRows = preppedPlan.collect()
+    if (preppedRows.isEmpty) {
+      val none = ClusterTable.emptyTable(spark)
+      return Step(pool, none, table, none.select(col("PK")), 0L)
     }
-    def checkpoint(df: DataFrame, eager: Boolean): DataFrame = {
-      val c = df.localCheckpoint(eager)
-      checkpoints += c
-      c
-    }
+    val prepped = spark.createDataFrame(preppedRows.toSeq.asJava, preppedPlan.schema)
+    val clustered = Clustering.step(
+      pool, prepped.select(col("id"), col("concat_embedding")),
+      Clustering.Config(eps = cfg.eps, strategy = cfg.strategy,
+        singletonTtl = cfg.singletonTtl))
+    val updated = clustered.assignments.select(col("cluster_id").as("PK")).distinct()
     try {
-      val clustered = Clustering.step(
-        pool, prepped.select(col("id"), col("concat_embedding")),
-        Clustering.Config(eps = cfg.eps, strategy = cfg.strategy,
-          singletonTtl = cfg.singletonTtl))
-      checkpoints += clustered.pool
-      val updated = clustered.assignments.select(col("cluster_id").as("PK")).distinct()
-      if (clustered.batchSize == 0)
-        Step(pool, ClusterTable.emptyTable(pool.sparkSession), table, updated, 0L, release)
-      else {
-        // built once each (see above)
-        val ups = checkpoint(
-          ClusterTable.upsertRows(table, clustered.assignments, prepped, cfg.clock), eager = false)
-        val next =
-          if (cfg.inlineSummarize) ClusterTable.summarizePass(
-            checkpoint(ClusterTable.merge(table, ups), eager = true), updated, cfg.threshold)
-          else ClusterTable.merge(table, ups)
-        // the next pool is the caller's from here on
-        checkpoints -= clustered.pool
-        Step(clustered.pool, ups, next, updated, clustered.batchSize, release)
-      }
-    } catch { case e: Throwable => release.close(); throw e }
+      val (ups, next) = ClusterTable.upsertBatch(table, clustered.assignments, prepped,
+        cfg.clock, Option.when(cfg.inlineSummarize)(cfg.threshold))
+      Step(clustered.pool, ups, next, updated, clustered.batchSize)
+    } catch { case e: Throwable => graft.SparkHygiene.freeCheckpoint(clustered.pool); throw e }
   }
 
   /** [[graft.SparkHygiene.withBatchExecution]] with `cfg`'s settings:
@@ -338,10 +322,7 @@ object StreamingPipeline {
         }
         prune(spark, poolBase, batchId, cfg.retainVersions)
         prune(spark, tableBase, batchId, cfg.retainVersions)
-      } finally {
-        s.release.close()
-        graft.SparkHygiene.freeCheckpoint(s.pool)
-      }
+      } finally graft.SparkHygiene.freeCheckpoint(s.pool)
     }
 
   /** Latest committed clusters table (the read path / A9 input): the

@@ -2,7 +2,11 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.operators.ClusterStore
 
@@ -114,7 +118,7 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"), s"corpus side should not shuffle for the probe:\n$p")
   }
 
-  test("ClusterTable.upsertRows joins are all broadcast — no SMJ of the metadata side") {
+  test("ClusterTable.upsertRows runs one job whose scan carries the PK filter") {
     import spark.implicits._
     import graft.operators.ClusterTable
     // parquet-backed table so planning sees a real scan, not a LocalRelation
@@ -131,15 +135,29 @@ class PlanSpec extends SparkSpec {
         ("a2", "T2", "S2", "X2", "2024-01-02 00:00:00")), clock)
     ClusterTable.merge(t0, seed).write.mode("overwrite").parquet(dir)
     val table = spark.read.parquet(dir)
-    val up = ClusterTable.upsertRows(table,
-      assigns(("a3", "c1", true, 3, 2), ("a4", "c2", true, 1, 1)),
-      arts(("a3", "T3", "S3", "X3", "2024-01-03 00:00:00"),
-        ("a4", "T4", "S4", "X4", "2024-01-04 00:00:00")), clock)
-    up.collect() // finalize any adaptive plan
-    val p = up.queryExecution.executedPlan.toString
-    assert(!p.contains("SortMergeJoin"),
-      s"upsert fell back to SMJ — a broadcast hint is being ignored again:\n$p")
-    assert(p.contains("BroadcastHashJoin"), s"expected broadcast joins:\n$p")
+    // the executed plans of the actions upsertRows runs
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    var up: org.apache.spark.sql.DataFrame = null
+    val jobs = try jobsOf {
+      up = ClusterTable.upsertRows(table,
+        assigns(("a3", "c1", true, 3, 2), ("a4", "c2", true, 1, 1)),
+        arts(("a3", "T3", "S3", "X3", "2024-01-03 00:00:00"),
+          ("a4", "T4", "S4", "X4", "2024-01-04 00:00:00")), clock)
+    } finally {
+      drainListenerBus()
+      spark.listenerManager.unregister(listener)
+    }
+    assert(jobs == 1, "upsertRows should read the table once and build the rows on the driver")
+    val scans = plans.asScala.toSeq.flatMap(_.collect { case s: FileSourceScanExec => s })
+    assert(scans.size == 1, plans)
+    assert(scans.head.toString.contains("In(PK, [c1,c2])"),
+      s"the metadata read scans every cluster:\n${scans.head}")
     // counter semantics survived the plan change: c1 existed (2+1=3) → 3+(2-1)=4
     val meta = up.filter(col("row_type") === "metadata")
       .select("PK", "number_of_articles").as[(String, Int)].collect().toMap

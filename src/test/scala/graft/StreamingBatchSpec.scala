@@ -72,9 +72,17 @@ class StreamingBatchSpec extends SparkSpec {
     val batch = feedBatch(2L)
     var jobs = 0
     val compiles = compilesOf {
-      jobs = leavesNothingPinned(jobsOf(StreamingPipeline.processBatch(batch, 1L, state, cfg)))
+      jobs = leavesNothingPinned(census(StreamingPipeline.processBatch(batch, 1L, state, cfg)))
     }
     (jobs, compiles, state)
+  }
+
+  /** [[jobsOf]] that also reports the jobs by call site, so a pin that
+    * breaks names the site that gained a job. */
+  private def census(body: => Unit): Int = {
+    val sites = jobsBySite(body)
+    info(sites.toSeq.sortBy(_._1).map { case (s, n) => s"$n × $s" }.mkString("jobs: ", "; ", ""))
+    sites.values.sum
   }
 
   /** Part files of the pool and table versions both feed batches wrote. */
@@ -98,6 +106,10 @@ class StreamingBatchSpec extends SparkSpec {
   // batch, counted by this spec: inline 45, decoupled 27.
   private val SeedInlineJobs = 45
   private val SeedDecoupledJobs = 27
+  // ... and while the upsert rows, the merged table and the summarize
+  // pass ran as distributed plans: inline 16, decoupled 11.
+  private val DistributedUpsertInlineJobs = 16
+  private val DistributedUpsertDecoupledJobs = 11
 
   // Part files of the feed batches' versions when the clustering merge
   // ran as a distributed dataflow (inline 24 jobs, decoupled 19).
@@ -108,8 +120,9 @@ class StreamingBatchSpec extends SparkSpec {
 
   test("inline micro-batch: fewer jobs than before, no cache left pinned") {
     val (jobs, compiles, state) = secondBatch(StreamingPipeline.Config(threshold = 5))
-    info(s"inline processBatch jobs: $jobs (was $SeedInlineJobs), compiled classes: $compiles")
-    assert(jobs == 16)
+    info(s"inline processBatch jobs: $jobs (was $SeedInlineJobs, then " +
+      s"$DistributedUpsertInlineJobs), compiled classes: $compiles")
+    assert(jobs == 10)
     assert(compiles <= MaxCompiles)
     noMoreFilesThan(DistributedMergeInlineFiles, state)
     // non-vacuous: both batches' 8 syndicated stories fired
@@ -120,12 +133,32 @@ class StreamingBatchSpec extends SparkSpec {
     "than before, no cache left pinned") {
     val (jobs, compiles, state) = secondBatch(StreamingPipeline.Config(threshold = 5,
       inlineSummarize = false, emitCdc = true))
-    info(s"decoupled processBatch jobs: $jobs (was $SeedDecoupledJobs), " +
-      s"compiled classes: $compiles")
-    assert(jobs == 11)
+    info(s"decoupled processBatch jobs: $jobs (was $SeedDecoupledJobs, then " +
+      s"$DistributedUpsertDecoupledJobs), compiled classes: $compiles")
+    assert(jobs == 9)
     assert(compiles <= MaxCompiles)
     noMoreFilesThan(DistributedMergeDecoupledFiles, state)
     assert(summarized(state) == 0)
+  }
+
+  // Jobs of an empty batch when it still ran the clustering step: the
+  // batch collect, the edge collect, the pool checkpoint and the two
+  // version writes.
+  private val ClusteredEmptyJobs = 5
+
+  test("empty micro-batch: no clustering, and it republishes the previous versions") {
+    val state = Files.createTempDirectory("graft-batch-empty").toString
+    val cfg = StreamingPipeline.Config(threshold = 5)
+    StreamingPipeline.processBatch(feedBatch(1L), 0L, state, cfg)
+    // every row fails the required-field contract, as corrupt JSON lines do
+    val invalid = feedBatch(2L).withColumn("title", lit(null).cast("string"))
+    val jobs = leavesNothingPinned(census(StreamingPipeline.processBatch(invalid, 1L, state, cfg)))
+    info(s"empty processBatch jobs: $jobs (was $ClusteredEmptyJobs)")
+    assert(jobs == 3)
+    def version(base: String, v: Int) = spark.read.parquet(s"$state/$base/v$v")
+    for (base <- Seq("pool", "table"))
+      assert(digest(version(base, 1)) == digest(version(base, 0)), base)
+    assert(version("table", 1).count() > 0)
   }
 
   test("latestTable schedules no Spark job and reads the written schema") {
@@ -144,6 +177,8 @@ class StreamingBatchSpec extends SparkSpec {
   // Jobs of the same pass before its feed and overlay reads took the
   // known schema (one inference job per read), counted by this spec.
   private val SeedCdcJobs = 23
+  // ... and while the summarizer broadcast its stats side: 20.
+  private val BroadcastStatsCdcJobs = 20
 
   test("CdcConsumer.runOnce over two pending versions: fewer jobs than before") {
     val state = Files.createTempDirectory("graft-cdc-jobs").toString
@@ -155,11 +190,12 @@ class StreamingBatchSpec extends SparkSpec {
     var jobs = 0
     val compiles = compilesOf {
       jobs = leavesNothingPinned(
-        jobsOf { consumed = CdcConsumer.runOnce(spark, state, threshold = 5, store = Some(store)) })
+        census { consumed = CdcConsumer.runOnce(spark, state, threshold = 5, store = Some(store)) })
     }
-    info(s"CdcConsumer.runOnce jobs: $jobs (was $SeedCdcJobs), compiled classes: $compiles")
+    info(s"CdcConsumer.runOnce jobs: $jobs (was $SeedCdcJobs, then $BroadcastStatsCdcJobs), " +
+      s"compiled classes: $compiles")
     assert(consumed == Seq(0L, 1L))
-    assert(jobs == 20)
+    assert(jobs == 19)
     assert(compiles <= MaxCompiles)
     // non-vacuous: both batches' 8 syndicated stories fired
     assert(summarized(state) == 16)
@@ -201,28 +237,19 @@ class StreamingBatchSpec extends SparkSpec {
     case other => fail(s"not a checkpoint: ${other.getClass.getSimpleName}")
   }
 
-  /** Order-free digest of a table's rows, every column included: row
-    * count and two hash sums. */
-  private def digest(df: DataFrame): (Long, BigDecimal, BigDecimal) = {
-    val cols = df.columns.map(col)
-    val r = df.select(xxhash64(cols: _*).cast("decimal(38,0)").as("h"),
-        hash(cols: _*).cast("decimal(38,0)").as("g"))
-      .agg(count(lit(1)), sum("h"), sum("g")).head()
-    (r.getLong(0), BigDecimal(r.getDecimal(1)), BigDecimal(r.getDecimal(2)))
-  }
-
   // Jobs of NewsPipeline.run on the 80 documents when it had a batch
-  // body of its own, counted by this spec. The shared core checkpoints
-  // the upsert rows, which the merge's broadcast and union each rebuilt.
+  // body of its own, counted by this spec, then with the shared core
+  // running the upsert, merge and summarize pass as distributed plans.
   private val SeedA9Jobs = 84
-  private val A9Jobs = 74
+  private val DistributedUpsertA9Jobs = 74
+  private val A9Jobs = 44
 
   test("NewsPipeline.run: pinned job count, and only the returned table stays pinned") {
     val docs = a9Docs()
     val before = persistedIds
     var table: DataFrame = null
-    val jobs = jobsOf { table = NewsPipeline.run(spark, docs) }
-    info(s"NewsPipeline.run jobs: $jobs (was $SeedA9Jobs)")
+    val jobs = census { table = NewsPipeline.run(spark, docs) }
+    info(s"NewsPipeline.run jobs: $jobs (was $SeedA9Jobs, then $DistributedUpsertA9Jobs)")
     try {
       assert(jobs == A9Jobs)
       assert(persistedIds -- before == Set(checkpointId(table)))

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.operators.Summarize
@@ -70,6 +72,24 @@ class SummarizeSpec extends SparkSpec {
       assert(o == orgs.get(pk), s"$pk organizations")
       assert((ed, ld) == dates(pk), s"$pk dates")
     }
+  }
+
+  test("clusterStats and dateRange read empty and malformed dates as undated, " +
+    "also under ANSI") {
+    val arts = Seq(
+      ("c1", "", Seq("NY")), ("c1", "2024-02-01T09:30:00Z", Seq("NY")),
+      ("c1", "not a date", Seq("SF")), ("c2", "", Seq.empty[String]))
+      .toDF("PK", "publication_date", "locations")
+      .withColumn("organizations", lit(null).cast("array<string>"))
+    val session = spark.newSession()
+    session.conf.set("spark.sql.ansi.enabled", "true")
+    val ansiArts = session.createDataFrame(arts.collect().toSeq.asJava, arts.schema)
+    val stats = Summarize.clusterStats(ansiArts).orderBy("PK").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(3), r.getString(4))).toSeq
+    assert(stats == Seq(("c1", "NY", "2024-02-01 09:30:00", "2024-02-01 09:30:00"),
+      ("c2", null, null, null)))
+    assert(Summarize.dateRange(ansiArts).orderBy("PK").collect().map(_.toSeq).toSeq ==
+      Seq(Seq("c1", "2024-02-01 09:30:00", "2024-02-01 09:30:00"), Seq("c2", null, null)))
   }
 
   test("A8/P11/P12 summarizeClusters: deterministic order, caps, tag round-trip") {
